@@ -123,24 +123,17 @@ def capped_bucket_pairs(rows: DataFrame, key: list[str], member: str,
     #     buckets). Hashing here only steers this performance decision —
     #     bucket identity in the join keys stays the exact min key tuple,
     #     so a hash collision can never change the pair set;
-    #   * n_part for the triangle join scales with the measured pair
-    #     output instead of a constant defaultParallelism*4 — a constant
-    #     is too BIG for small hot sets (128 near-empty tasks) and too
-    #     SMALL at 100x scale (the round-5 straggler incident had 2.27M
-    #     pairs/task at width 128).
+    #   * n_part for the triangle join scales with the pair output instead
+    #     of a constant defaultParallelism*4 — a constant is too BIG for
+    #     small hot sets (128 near-empty tasks) and too SMALL at 100x scale
+    #     (the round-5 straggler incident had 2.27M pairs/task at width
+    #     128). Under member-set dedup the output is estimated as
+    #     pairs × distinct_sets / buckets (Every Row Counts, CIDR'19): the
+    #     width is the ONE use that may rest on an estimate, since it
+    #     changes only the partition count, never the pair set. 32
+    #     identical band buckets give exactly the deduped count.
     # The aggregate reads the persisted grp, which every downstream branch
     # was about to materialize anyway — the cost is one job of scheduling.
-    def _hot_stats(src: DataFrame):
-        return (src.select(F.size("members").cast("long").alias("m"))
-                .agg(F.coalesce(F.sum("m"), F.lit(0)).alias("rows"),
-                     F.coalesce(F.sum(
-                         F.floor(F.col("m") / cap) * (cap * (cap - 1) // 2)
-                         + F.floor((F.col("m") % cap)
-                                   * ((F.col("m") % cap) - 1) / 2)
-                         + F.ceil(F.col("m") / cap) - 1), F.lit(0))
-                     .alias("pairs"))
-                .collect()[0])
-
     hot_grp = grp.where(F.size("members") > soft)
     pre = (hot_grp.select(
         F.size("members").cast("long").alias("m"),
@@ -161,18 +154,19 @@ def capped_bucket_pairs(rows: DataFrame, key: list[str], member: str,
     # hot-bucket source: optionally deduped by (dedup_key, member set)
     # with the min original key tuple as the bucket identity `bk` for the
     # triangle join keys (struct equality — exact).
+    hot_pairs = int(pre["pairs"])
     if (dedup_key is not None
             and 2 * int(pre["distinct_sets"]) <= int(pre["buckets"])):
-        # persist: five consumers read hot_src (the post-dedup stats +
-        # kept's four branches); uncached, each would re-run the groupBy
+        # persist: kept's four branches read hot_src; uncached, each
+        # would re-run the groupBy
         hot_src = scoped_persist(
             hot_grp.groupBy(*out_key, "members")
             .agg(F.min(F.struct(*key)).alias("bk")))
-        hot = _hot_stats(hot_src)   # post-dedup pair count sizes n_part
+        hot_pairs = (hot_pairs * int(pre["distinct_sets"])
+                     // int(pre["buckets"]))
     else:
         hot_src = hot_grp.select(*out_key, "members",
                                  F.struct(*key).alias("bk"))
-        hot = pre
 
     # layer 1 (buckets above soft only): sub-bucket split (linear skew
     # bound) — sub index + size. These rows are the skew tail, so the
@@ -230,7 +224,7 @@ def capped_bucket_pairs(rows: DataFrame, key: list[str], member: str,
     # skew — work per (bk, sub, i, j) group is bounded by soft² pairs, so
     # groups spread evenly at any width).
     par = rows.sparkSession.sparkContext.defaultParallelism
-    n_part = min(par * 4, max(par, -(-int(hot["pairs"]) // 100_000)))
+    n_part = min(par * 4, max(par, -(-hot_pairs // 100_000)))
     raw_pairs = (left.repartition(n_part, *join_key)
                  .join(right.repartition(n_part, *join_key),
                        on=join_key, how="inner")

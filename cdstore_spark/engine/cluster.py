@@ -25,23 +25,8 @@ at component minima; cluster_id = min(clip_id) in component falls out.
 
 from __future__ import annotations
 
-import os
-import sys
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-#: SPARK_GRAFT_CC_DEBUG=1 prints per-phase walls to stderr — measurement
-#: aid only, no behavior change
-_DEBUG = os.environ.get("SPARK_GRAFT_CC_DEBUG", "0") == "1"
-
-
-def _dbg(label: str, t0: float) -> float:
-    t = time.time()
-    if _DEBUG:
-        print(f"cc: {label} {t - t0:.2f}s", file=sys.stderr, flush=True)
-    return t
 
 #: adaptive local-finish gate: once a round's output edge set is at most
 #: this many edges (~50 MB collected at ~50 B/edge), the remaining
@@ -155,13 +140,11 @@ def connected_components(pairs: DataFrame, universe: DataFrame,
     # cached plan vs the round's canonicalized subtree) — the round then
     # silently recomputed the whole verify stage without its released
     # side-table caches (~35x the checkpoint cost at the bench tier).
-    t0 = time.time()
     edges = (pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
              .where(F.col("u") != F.col("v")))
     if not edges_distinct:
         edges = edges.distinct()
     edges = edges.localCheckpoint(eager=True)
-    t0 = _dbg("seed checkpoint", t0)
 
     # convergence = output edge set equals the INPUT's (fixpoint of
     # large_star∘small_star); seeding prev_sig with the initial edges'
@@ -172,19 +155,15 @@ def connected_components(pairs: DataFrame, universe: DataFrame,
     # already under the local-finish gate (bench-tier confirmed sets)
     # skips that scan entirely.
     n_seed = edges.count()
-    t0 = _dbg("seed count", t0)
     if n_seed <= _LOCAL_FINISH_MAX_EDGES:
         labels = _local_finish(edges)
-        t0 = _dbg("local finish", t0)
         return _attach(universe, labels)
     prev_sig = _sig(edges)
-    t0 = _dbg("seed sig", t0)
     prev = edges
     labels = None
     for _ in range(max_iter):
         if prev_sig[0] <= _LOCAL_FINISH_MAX_EDGES:
             labels = _local_finish(prev)
-            t0 = _dbg("local finish", t0)
             break
         # ONE star composition per checkpoint round — also measured, do
         # not "optimize" to two: composing a second (large∘small) step on
@@ -211,15 +190,12 @@ def connected_components(pairs: DataFrame, universe: DataFrame,
         # sub-4M-edge) checkpoint for that round.
         if prev_sig[0] <= _LOCAL_FINISH_MAX_EDGES * _HALF_ROUND_PROBE_FACTOR:
             half = _large_star(prev).localCheckpoint(eager=True)
-            t0 = _dbg("large_star half", t0)
             if half.count() <= _LOCAL_FINISH_MAX_EDGES:
                 labels = _local_finish(half)
-                t0 = _dbg("local finish (half)", t0)
                 break
             cur = _small_star(half).localCheckpoint(eager=True)
         else:
             cur = _small_star(_large_star(prev)).localCheckpoint(eager=True)
-        t0 = _dbg("star round", t0)
         sig = _sig(cur)             # cheap second job: scans the checkpoint
         prev = cur
         if sig == prev_sig:

@@ -13,10 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """Half of MemTotal in whole GiB, within [1, 24]: in local mode the
+    driver JVM holds every executor and shares the host with one Python
+    worker per core, so a fixed 24g is OOM-killed on a 15 GB host."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{max(1, min(24, kb // (2 << 20)))}g"
+
+
 def get_spark(app: str = "cdstore-spark", parallelism: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
-    cores = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = parallelism or int(os.environ.get(
+        "SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     shuffle = shuffle_partitions or max(2 * cores, 32)
     b = (
         SparkSession.builder
@@ -53,7 +63,8 @@ def get_spark(app: str = "cdstore-spark", parallelism: int | None = None,
         # setting only shapes the remaining small-row UDF stages
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_heap())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

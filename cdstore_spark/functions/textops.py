@@ -4,8 +4,9 @@
 Design notes (100 TB posture):
   * Word-n-gram explode + self-join keys are hashed (xxhash64) before the
     shuffle so the exchange moves 8-byte keys, not raw n-gram strings.
-  * Exact Jaccard is computed with one aggregation per pair after an
-    equi-join on gram hash — no cross join anywhere.
+  * Each doc's grams are ONE sorted, distinct array of gram hashes, built
+    per row; exact Jaccard is the size of the intersection of two such
+    arrays, computed only for candidate pairs — no cross join anywhere.
   * The MinHash-LSH variant prunes the pair space to band collisions first
     (O(n·bands) rows) and only computes exact Jaccard on survivors; at the
     32x4 config the probability of missing a Jaccard >= 0.8 pair is
@@ -47,27 +48,21 @@ def doc_ngrams(df: DataFrame, n: int = NGRAM) -> DataFrame:
 
 
 def _gram_hashed(df: DataFrame, n: int = NGRAM) -> DataFrame:
-    """(doc_id, gh) distinct hashed word n-grams. Grams are hashed BEFORE
-    any shuffle so downstream exchanges move 16-byte (doc_id, gh) rows,
-    not raw n-gram strings — at corpus scale the string payload dominates
-    the exchange otherwise.
-
-    The gram-hash array is built per row with transform() and deduped per
-    row with array_distinct() BEFORE the explode (round 6): the previous
-    explode-then-project shape made every exploded row carry the full
-    `toks` array — O(tokens²) bytes materialized per doc through the
-    Generate — and then paid a full (doc_id, gh) distinct exchange for a
-    dedup that is per-doc by construction (doc_id is in the key). Same
-    output set (count + value hash asserted); measured 4.83 -> 0.86 s for
-    the full gram aggregate at local[8]/sf0.1, and the distinct exchange
-    is gone."""
+    """(doc_id, ghs): ONE row per doc with >= n tokens, `ghs` the sorted,
+    distinct array of its hashed word n-grams — the single gram
+    representation every text path shares. Grams are hashed per row
+    (transform over token positions, no explode), so no downstream
+    exchange moves raw n-gram strings and no gram-keyed row exists until a
+    caller that needs one (document frequencies, the prefix join) explodes
+    `ghs` itself. Sorted so equal gram sets give equal arrays (the content
+    key in _pair_jaccard hashes the array as is)."""
     t = _tokens(df).where(F.size("toks") >= n)
     gram = lambda i: F.concat_ws(  # noqa: E731
         " ", *[F.element_at("toks", i + 1 + k) for k in range(n)])
-    ghs = F.array_distinct(
+    ghs = F.sort_array(F.array_distinct(
         F.transform(F.sequence(F.lit(0), F.size("toks") - n),
-                    lambda i: F.xxhash64(gram(i))))
-    return t.select("doc_id", F.explode(ghs).alias("gh"))
+                    lambda i: F.xxhash64(gram(i)))))
+    return t.select("doc_id", ghs.alias("ghs"))
 
 
 def dedup_exact_canonical(df: DataFrame) -> DataFrame:
@@ -95,65 +90,51 @@ def _pair_jaccard(cand: DataFrame, g: DataFrame,
                   threshold: float) -> DataFrame:
     """Exact Jaccard computed ONLY for the given candidate pairs.
 
-    cand(a, b) routes each pair through the doc-keyed gram table twice
-    (equi-joins on doc id, then on gram hash), so work is linear in
-    |cand| x grams-per-doc — never in the all-pairs gram join. This is
-    the shared verification tail of both the prefix-filtered exact path
-    and the MinHash-LSH path.
+    `g` is _gram_hashed output: one sorted, distinct gram-hash array per
+    doc. The intersection of two such arrays is the intersection of the
+    two gram sets, so |A ∩ B| = size(array_intersect(ghs_a, ghs_b)) and
+    J = |A ∩ B| / (|A| + |B| - |A ∩ B|), per row — the sorted-set
+    intersection of HERO (SIGMOD'24). Work is linear in |cand| x
+    grams-per-doc, with no join on gram hash. This is the shared
+    verification tail of both the prefix-filtered exact path and the
+    MinHash-LSH path.
 
-    Work is deduplicated per distinct CONTENT pair (round 6, the same
-    idea as the audio verify stage): Jaccard is a pure function of the
-    two gram SETS, and dup-heavy corpora repeat the same set across many
-    pairs — the bench's planted 5k-member hot group yields 629,359
-    candidate pairs that are all ONE content pair. Each doc gets a
-    128-bit content key (md5 over its sorted gram hashes, derived from
-    `g` itself so every caller gets the dedup), the gram joins run on one
-    representative pair per distinct (ka, kb), and results join back to
-    the full pair list. Identical output: key-equal docs have equal gram
-    sets by construction, so every pair sharing (ka, kb) has the same
-    Jaccard.
+    Work is deduplicated per distinct CONTENT pair (the same idea as the
+    audio verify stage): Jaccard is a pure function of the two gram SETS,
+    and dup-heavy corpora repeat the same set across many pairs — a
+    planted 5k-member hot group yields 629,359 candidate pairs that are
+    all ONE content pair. Each doc gets a 128-bit content key (md5 over
+    its sorted gram hashes), the intersection runs on one representative
+    pair per distinct (ka, kb), and results join back to the full pair
+    list. Identical output: key-equal docs have equal gram sets by
+    construction, so every pair sharing (ka, kb) has the same Jaccard.
     """
     from ..engine.scope import scoped_persist
-    # ONE persisted per-doc aggregation yields BOTH the content key and
-    # the gram-set size (sz = size of the same collected array the key
-    # hashes — a separate count() agg was a second full pass over g, and
-    # the unpersisted key subtree was computed once per join alias). sz
-    # rides along with the key through kand/rep, so the two sizes joins
-    # the old shape paid at the end are gone too.
-    ks = scoped_persist(
-        g.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("gh")).alias("ghs"))
-        .select("doc_id",
-                F.md5(F.concat_ws(",", F.transform(
-                    "ghs", lambda x: x.cast("string")))).alias("ck"),
-                F.size("ghs").alias("sz")))
+    # persisted: the key joins of kand and the array joins of rep both
+    # read it, and uncached each would re-tokenize and re-hash the docs
+    ks = scoped_persist(g.select(
+        "doc_id", "ghs",
+        F.md5(F.concat_ws(",", F.transform(
+            "ghs", lambda x: x.cast("string")))).alias("ck")))
     kand = scoped_persist(
         cand.join(ks.select(F.col("doc_id").alias("a"),
-                            F.col("ck").alias("ka"),
-                            F.col("sz").alias("sz_a")), "a")
+                            F.col("ck").alias("ka")), "a")
         .join(ks.select(F.col("doc_id").alias("b"),
-                        F.col("ck").alias("kb"),
-                        F.col("sz").alias("sz_b")), "b"))
-    # sz_a/sz_b are functions of ka/kb (equal content key ⇒ equal gram
-    # set ⇒ equal size), so min() just picks the shared value
+                        F.col("ck").alias("kb")), "b"))
     rep = (kand.groupBy("ka", "kb")
-           .agg(F.min(F.struct("a", "b")).alias("r"),
-                F.min("sz_a").alias("sz_a"), F.min("sz_b").alias("sz_b"))
+           .agg(F.min(F.struct("a", "b")).alias("r"))
            .select(F.col("r.a").alias("a"), F.col("r.b").alias("b"),
-                   "ka", "kb", "sz_a", "sz_b"))
-    ga = g.select(F.col("doc_id").alias("a"), "gh")
-    gb = g.select(F.col("doc_id").alias("b"), "gh")
-    inter = (rep.select("a", "b").join(ga, "a")
-             .join(gb, ["b", "gh"])
-             .groupBy("a", "b")
-             .agg(F.count(F.lit(1)).alias("inter")))
-    raw_j = (F.col("inter")
-             / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-    res = (inter.join(rep, ["a", "b"])
-           .where(raw_j >= threshold)          # threshold on the raw value
-           .select("ka", "kb",
-                   (F.floor(raw_j * F.lit(1e6) + F.lit(0.5))
-                    / F.lit(1e6)).alias("jaccard")))
+                   "ka", "kb")
+           .join(ks.select(F.col("doc_id").alias("a"),
+                           F.col("ghs").alias("ghs_a")), "a")
+           .join(ks.select(F.col("doc_id").alias("b"),
+                           F.col("ghs").alias("ghs_b")), "b"))
+    inter = F.size(F.array_intersect("ghs_a", "ghs_b"))
+    res = (rep.select("ka", "kb", (inter / (F.size("ghs_a") + F.size("ghs_b")
+                                            - inter)).alias("j"))
+           .where(F.col("j") >= threshold)     # threshold on the raw value
+           .select("ka", "kb", (F.floor(F.col("j") * F.lit(1e6) + F.lit(0.5))
+                                / F.lit(1e6)).alias("jaccard")))
     # representative results → every pair sharing the content-key pair
     return (kand.join(res, ["ka", "kb"])
             .select("a", "b", "jaccard"))
@@ -171,7 +152,8 @@ def prefix_candidates(g: DataFrame, threshold: float = JACCARD_THRESHOLD
     skip them. This is the skew bound for the document gram join — the
     analog of the audio path's sub-bucket split, but lossless."""
     from ..engine.scope import scoped_persist
-    dfreq = g.groupBy("gh").agg(F.count(F.lit(1)).alias("gdf"))
+    gx = g.select("doc_id", F.explode("ghs").alias("gh"))
+    dfreq = gx.groupBy("gh").agg(F.count(F.lit(1)).alias("gdf"))
     # ceil over a 9-dp rounded product: when t*sz is mathematically an
     # integer but the double product lands epsilon above it (arbitrary
     # user thresholds — 0.8 happens to round clean), a raw ceil would
@@ -188,7 +170,7 @@ def prefix_candidates(g: DataFrame, threshold: float = JACCARD_THRESHOLD
     # same rows by construction. persist: the self-join below would
     # otherwise compute the whole prefix subtree once per alias.
     prefix = scoped_persist(
-        g.join(dfreq, "gh")
+        gx.join(dfreq, "gh")
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list(F.struct("gdf", "gh"))).alias("ms"))
         .select("doc_id",
@@ -212,8 +194,8 @@ def jaccard_pairs(df: DataFrame, threshold: float = JACCARD_THRESHOLD
 
     (a, b, jaccard) with a < b; jaccard rounded to 6 dp for stable compare.
     """
-    # the gram table feeds dfreq, sizes, the prefix join AND the pair
-    # verification — checkpoint it once instead of re-tokenizing the corpus
+    # the gram arrays feed dfreq, the prefix join AND the pair
+    # verification — persist them once instead of re-tokenizing the corpus
     # in every branch
     from ..engine.scope import scoped_persist
     g = scoped_persist(_gram_hashed(df))
@@ -251,8 +233,8 @@ def gram_df_stats(df: DataFrame, hot_df: int = 32) -> DataFrame:
     audio_skew_stats: how many distinct grams, how hot the hottest key is,
     and how many grams exceed the hot threshold (i.e. would dominate a
     naive gram self-join's shuffle; the prefix filter keeps them out)."""
-    g = _gram_hashed(df)
-    dfreq = g.groupBy("gh").agg(F.count(F.lit(1)).alias("gdf"))
+    dfreq = (_gram_hashed(df).select(F.explode("ghs").alias("gh"))
+             .groupBy("gh").agg(F.count(F.lit(1)).alias("gdf")))
     zero = F.lit(0).cast("long")
     return dfreq.agg(
         F.count(F.lit(1)).alias("n_grams"),
@@ -347,7 +329,7 @@ def minhash_lsh_pairs(df: DataFrame, cfg: PipelineConfig = DEFAULT,
     ids = cand.select(F.explode(F.array("a", "b")).alias("doc_id")
                       ).distinct()
     g = _gram_hashed(df.join(ids, "doc_id", "left_semi"))
-    return _pair_jaccard(cand, scoped_persist(g), threshold)
+    return _pair_jaccard(cand, g, threshold)
 
 
 def simhash_hamming_pairs(df: DataFrame, cfg: PipelineConfig = DEFAULT,

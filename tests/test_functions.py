@@ -329,6 +329,57 @@ class TestTextops:
         pairs = X.jaccard_pairs(df).toPandas()
         assert set(map(tuple, pairs[["a", "b"]].values)) == {(900, 901)}
 
+    def test_jaccard_pairs_match_bruteforce_sets(self, spark):
+        """Exact Jaccard from the per-doc gram-hash arrays equals a pure-
+        Python set Jaccard over the same arrays, on a corpus with a
+        repeated trigram, an exact-duplicate group (one content pair for
+        many doc pairs), pairs just above, exactly at and just below 0.8,
+        and docs too short to have a trigram."""
+        import itertools
+        import math
+
+        from cdstore_spark.functions import textops as X
+
+        def words(p, n, tail=""):
+            ws = [f"{p}{j}" for j in range(n)]
+            if tail:              # replace the last 5 words: T-5 shared
+                ws[-5:] = [f"{tail}{j}" for j in range(5)]
+            return " ".join(ws)
+        rep = "r0 r1 r2 r0 r1 r2 r0 r1 r2 r3 r4 r5 r6 r7"
+        rows = [(1, rep), (2, rep + " r8"),            # 8/9 by set
+                (14, words("dup", 62, "near"))]
+        rows += [(i, words("dup", 62)) for i in (10, 11, 12, 13)]
+        for i, n in ((30, 48), (32, 47), (34, 46)):    # T = n - 2 trigrams
+            rows += [(i, words(f"p{i}x", n)), (i + 1, words(f"p{i}x", n, "q"))]
+        rows += [(40, "tiny doc"), (41, "tiny doc"), (42, "one")]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+
+        g = X._gram_hashed(df).toPandas()
+        assert g["doc_id"].is_unique                   # one row per doc
+        sets = {int(d): set(map(int, a)) for d, a in zip(g["doc_id"],
+                                                        g["ghs"])}
+        assert all(list(a) == sorted(set(a)) for a in g["ghs"])
+        for d, t in rows:
+            tk = t.split()
+            tri = {tuple(tk[k:k + 3]) for k in range(len(tk) - 2)}
+            assert len(sets.get(d, ())) == len(tri)   # no grams if < 3 toks
+
+        def ref(t):
+            out = set()
+            for a, b in itertools.combinations(sorted(sets), 2):
+                i = len(sets[a] & sets[b])
+                j = i / (len(sets[a]) + len(sets[b]) - i)
+                if j >= t:
+                    out.add((a, b, math.floor(j * 1e6 + 0.5) / 1e6))
+            return out
+        key = lambda d: set(map(tuple, d[["a", "b", "jaccard"]].values))
+        assert {(30, 31, 0.803922), (32, 33, 0.8), (1, 2, 0.888889),
+                (10, 14, 0.846154)} <= ref(0.8)
+        assert (34, 35, 0.795918) in ref(0.5) - ref(0.8)
+        for t in (0.5, 0.8):
+            assert key(X.jaccard_pairs(df, threshold=t).toPandas()) == ref(t)
+        assert key(X.minhash_lsh_pairs(df).toPandas()) == ref(0.8)
+
     def test_lang_id_separates_languages(self, spark):
         """Char-trigram profiles must separate corpora with genuinely
         different character statistics (the driver documents table's lang
