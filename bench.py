@@ -127,11 +127,11 @@ def worker(cpus: int, what: str, path: str, out: str) -> None:
             n_cand = cand.count()
         stages["candidates"] = round(time.time() - t1, 2)
         t1 = time.time()
-        with cache_scope():   # releases verify's six side tables
-            conf = S_verify.verify_candidates(cand, feats, CFG,
-                                              n_feats=n,
-                                              n_cand=n_cand).persist()
-            n_conf = conf.count()
+        # verify persists nothing of its own: no cache scope needed
+        conf = S_verify.verify_candidates(cand, feats, CFG,
+                                          n_feats=n,
+                                          n_cand=n_cand).persist()
+        n_conf = conf.count()
         stages["verify"] = round(time.time() - t1, 2)
         t1 = time.time()
         clips = spark.read.parquet(path)

@@ -55,31 +55,22 @@ _RAW_FEATURE_SCHEMA = T.StructType([
 ])
 
 #: public feature schema = kernel output + the 16-byte CONTENT KEYS
-#: (md5 of the packed event stream / of the transcript) + the per-row
-#: PAYLOAD BYTE COUNT. All computed ONCE here, fused into the featurize
-#: stage's output projection (JVM md5/octet_length, no extra stage) —
-#: verify's slim pair assembly and both payload tables consume the keys
-#: directly; computing them lazily in verify instead re-scans the
-#: multi-KB cached payload columns once per consumer (measured: ~150
-#: task-seconds across three scans at the 400k tier). `pbytes` is what
-#: lets verify's size-adaptive strategy pick fused-vs-dedup from a cheap
-#: slim-column aggregate instead of scanning the payloads to weigh them
-#: (the first fused-path gate did exactly that: it semi-joined and
-#: checkpointed ~GBs of 400k-tier payloads only to learn they were over
-#: budget).
+#: (md5 of the packed event stream / of the transcript), computed ONCE
+#: here, fused into the featurize stage's output projection (JVM md5, no
+#: extra stage) — verify's per-content-pair memos key on them directly;
+#: computing them lazily in verify instead re-scans the multi-KB cached
+#: payload columns once per consumer (measured: ~150 task-seconds across
+#: three scans at the 400k tier).
 FEATURE_SCHEMA = T.StructType(
     _RAW_FEATURE_SCHEMA.fields
-    + [T.StructField("vk", T.StringType()), T.StructField("tk", T.StringType()),
-       T.StructField("pbytes", T.LongType())])
+    + [T.StructField("vk", T.StringType()),
+       T.StructField("tk", T.StringType())])
 
 
 def _with_content_keys(df: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
     return (df.withColumn("vk", F.md5("vpack"))
-            .withColumn("tk", F.md5("transcript"))
-            .withColumn("pbytes",
-                        (F.octet_length("vpack")
-                         + F.octet_length("transcript")).cast("long")))
+            .withColumn("tk", F.md5("transcript")))
 
 
 def load_clips(spark: SparkSession, path: str) -> DataFrame:

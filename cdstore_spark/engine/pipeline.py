@@ -25,7 +25,7 @@ from .snapshot import StageCheckpoint, chunk_filter
 
 #: bump when a stage's on-disk schema or semantics change — invalidates
 #: every existing snapshot chunk via the stage fingerprint
-ENGINE_LAYOUT_VERSION = 5
+ENGINE_LAYOUT_VERSION = 6
 
 
 def stage_fingerprint(cfg: PipelineConfig, n_chunks: int,
@@ -79,28 +79,16 @@ def run_pipeline(spark: SparkSession, clips_path: str, workdir: str,
         spark, lambda _i: skew_plan,
         hash_cols_for_lineage=["channel", "n_buckets", "max_bucket"])
 
-    # feature-row count for verify's broadcast-vs-shuffle decision comes
-    # free from the stage manifest (per-chunk lineage row counts) — no
-    # count() action; candidate count likewise (a sound upper bound for
-    # every per-chunk verify invocation's sparse-corpus fused gate)
-    n_feats = sum(e["rows"] for e in ck_feat.lineage())
-    n_cand_total = sum(e["rows"] for e in ck_cand.lineage())
-
     ck_ver = StageCheckpoint(workdir, "s7_confirmed", n_chunks, fp)
     # chunks are disjoint hash ranges of the pair key — run them
     # CONCURRENTLY so one chunk's driver-serial phases (broadcast builds,
     # small-stage scheduling) overlap another's executor work. Each
-    # concurrent chunk gets 1/workers of the verify broadcast budgets:
-    # the fused path's payload gate is per-invocation, and without the
-    # division 4 chunks could pin 4 x 2 x 256 MB of payload broadcasts
-    # at once
+    # chunk's joins are sized by Spark's own broadcast thresholds
     ver_workers = min(4, n_chunks)
     confirmed = ck_ver.run(
         spark,
         lambda i: S_verify.verify_candidates(
-            cand.where(chunk_filter("a", n_chunks, i)), feats, cfg,
-            n_feats=n_feats, budget_shares=ver_workers,
-            n_cand=n_cand_total),
+            cand.where(chunk_filter("a", n_chunks, i)), feats, cfg),
         hash_cols_for_lineage=["a", "b", "audio_ok", "text_ok"],
         max_workers=ver_workers)
 

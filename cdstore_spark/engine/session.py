@@ -38,13 +38,12 @@ def get_spark(app: str = "cdstore-spark", parallelism: int | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # broadcast decisions belong to AQE, which sees EXACT stage sizes:
-        # the verify side tables (probed payloads, content-pair results)
-        # are a few MB..tens of MB at test tiers (broadcast wins — avoids
-        # re-shuffling the big pair table) but grow past any broadcast
-        # budget with corpus size (round 4 measured 91 MB payloads /
-        # ~230 MB results at 4x data, where driver-serial broadcast
-        # builds dominated the scaling ladder). No static hints in the
-        # engine; this threshold lets AQE convert up to 64 MB measured —
+        # verify's per-clip feature projection (payload-wide) is a few
+        # MB..tens of MB at test tiers (broadcast wins — avoids
+        # re-shuffling the big pair table) but grows past any broadcast
+        # budget with corpus size, where driver-serial broadcast builds
+        # dominated the scaling ladder. No static hints in the engine;
+        # this threshold lets AQE convert up to 64 MB measured —
         # static planning keeps the conservative 10 MB estimate-based
         # default.
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")

@@ -120,8 +120,9 @@ class StageCheckpoint:
             t0 = time.time()
             out = os.path.join(self.dir, f"chunk={i}")
             # per-chunk cache scope: scoped_persist()s made while building
-            # and writing this chunk (e.g. verify's side tables) are
-            # released as soon as the chunk's parquet write materializes
+            # and writing this chunk (e.g. the candidate join's bucket
+            # aggregate) are released as soon as the chunk's parquet
+            # write materializes
             with cache_scope():
                 df = (compute_chunk(i)
                       .withColumn("_part", F.spark_partition_id()))

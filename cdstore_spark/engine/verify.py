@@ -2,30 +2,27 @@
 
 Payload discipline (SURVEY.md §7.4 decision 4): verify never touches raw
 `bytes` — it consumes the compact event streams + transcripts produced by
-featurize, and only for clips that actually appear in a candidate pair
-(semi-join first, so at production scale the big feature table is filtered
-down to the tiny candidate universe before any wide join).
+featurize.
 
-Round-3 restructure — verify work is deduplicated at the DATAFLOW level:
+One physical plan. The candidate pairs, repartitioned to twice the core
+count, join on `a` and on `b` to one projection of the features (clip_id,
+both simhashes, the vk/tk content keys, vpack, transcript); one
+mapInPandas stage then evaluates the SimHash corroboration gates and both
+channel kernels per pair. The joins carry no static broadcast hints:
+Spark's planner and AQE's adaptive threshold (64 MB, session.py) pick
+broadcast or shuffle from each join's measured size, so the plan needs no
+byte budget of its own.
 
-1. **Slim pair assembly.** Candidate pairs join only per-clip simhashes
-   and 16-byte content keys (md5 of the packed event stream / of the
-   transcript) — the multi-KB payloads never enter the 10^5..10^6-row
-   pair table, so the pair join and its Arrow crossing move ~100 B/row
-   instead of ~7 KB/row (measured: payload transfer was ~a third of the
-   old stage wall).
-2. **Once per distinct oriented content pair.** Near-dup corpora repeat
-   the same (event stream, transcript) contents across many candidate
-   pairs (3.5x on the correctness tier), and both channel kernels are
-   pure functions of the contents — so each runs once per DISTINCT
-   (content_a, content_b) key pair, and results join back to the slim
-   pair table. Orientation is preserved (no least/greatest on content
-   keys): span_ms sums the A side's durations over the matched run, so
-   swapping roles can flip audio_ok near the span threshold.
+Work is deduplicated inside the kernel, not in the dataflow. Near-dup
+corpora repeat the same (event stream, transcript) contents across many
+candidate pairs, and both channel kernels are pure functions of the
+contents, so each partition memoizes results per oriented content-key
+pair. Orientation is preserved (no least/greatest on content keys):
+span_ms sums the A side's durations over the matched run, so swapping
+roles can flip audio_ok near the span threshold.
 
-The SimHash corroboration gate (from_channel LSH provenance OR channel
-simhash Hamming <= gate bits) is evaluated JVM-side with bit_count(xor) —
-bit-identical to the NumPy hamming64 kernel the single-node oracle uses.
+The SimHash gate (from_channel LSH provenance OR channel simhash Hamming
+<= gate bits) uses the NumPy hamming64 kernel the single-node oracle uses.
 """
 
 from __future__ import annotations
@@ -38,7 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT, PipelineConfig
-from .scope import scoped_persist
 
 VERIFY_SCHEMA = T.StructType([
     T.StructField("a", T.StringType()),
@@ -48,35 +44,6 @@ VERIFY_SCHEMA = T.StructType([
     T.StructField("span_ms", T.DoubleType()),
     T.StructField("span_chars", T.IntegerType()),
 ])
-
-_AUDIO_RES_SCHEMA = T.StructType([
-    T.StructField("vk_a", T.StringType()),
-    T.StructField("vk_b", T.StringType()),
-    T.StructField("audio_okc", T.BooleanType()),
-    T.StructField("span_ms_c", T.DoubleType()),
-])
-
-_TEXT_RES_SCHEMA = T.StructType([
-    T.StructField("tk_a", T.StringType()),
-    T.StructField("tk_b", T.StringType()),
-    T.StructField("nchars", T.IntegerType()),
-])
-
-#: broadcast budget for the slim per-clip side tables (~120 B/row): two
-#: broadcasts of the candidate-universe keys must stay well under executor
-#: memory on a real cluster; above it the pair join falls back to shuffle
-_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
-_SLIM_ROW_BYTES = 128
-
-# NO static broadcast hints on the side-table joins below: whether a
-# probed-payload or content-pair-result table should broadcast depends on
-# corpus size (tens of MB at test tiers, unbounded at production scale),
-# and AQE decides from EXACT runtime stage sizes under the session's
-# adaptive.autoBroadcastJoinThreshold (64 MB, session.py) — broadcast at
-# test tiers, shuffle at scale, no driver-serial build on the big path.
-# Tests force the all-shuffle plan by setting the thresholds to -1 and
-# _BROADCAST_MAX_BYTES to 0.
-
 
 #: per-partition content-memo BYTE budget — each content appears in many
 #: pairs, so the kernels cache per-content preprocessing (event unpack /
@@ -88,9 +55,7 @@ _MEMO_MAX_BYTES = 64 * 1024 * 1024
 
 
 class _AudioPairState:
-    """Per-partition audio verification state, shared by the channel
-    kernel (content-dedup path) and the fused per-pair kernel so both run
-    IDENTICAL arithmetic:
+    """Per-partition audio verification state for the fused kernel:
 
       * length gate — event counts read straight from the 4-byte pack
         header (no unpack, no memo traffic) for every row at once;
@@ -101,11 +66,9 @@ class _AudioPairState:
         float32 pairwise sum matches the kernel's ms_a[0:n].sum()
         bit-for-bit; the per-content span is memoized so an n-member
         exact-duplicate group costs n sums, not n^2 kernel calls;
-      * result memo — oriented (vk_a, vk_b) -> (ok, span): on the fused
-        per-pair path the same content pair recurs across rows of a
-        partition, and the kernels are pure functions of content. On the
-        dedup path keys are already distinct per partition, so it costs
-        one dict probe per row. Both the span and result memos are
+      * result memo — oriented (vk_a, vk_b) -> (ok, span): the same
+        content pair recurs across rows of a partition, and the kernels
+        are pure functions of content. Both the span and result memos are
         BYTE-budgeted against _MEMO_MAX_BYTES like the unpack memo
         (~200 B/entry approximation charged per insert) — entry-count
         caps alone would admit hundreds of MB of tuple/dict overhead
@@ -196,30 +159,6 @@ class _AudioPairState:
             ok[i], span[i] = r
 
 
-def _audio_kernel(cfg: PipelineConfig):
-    """Batched audio verification over distinct oriented content pairs —
-    the vectorized gates + memo machinery live in _AudioPairState (shared
-    with the fused per-pair kernel)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        st = _AudioPairState(cfg)
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            vka = pdf["vk_a"].to_numpy()
-            vkb = pdf["vk_b"].to_numpy()
-            va = pdf["vpack_a"].to_numpy()
-            vb = pdf["vpack_b"].to_numpy()
-            ok = np.zeros(m, dtype=bool)
-            span = np.zeros(m, dtype=np.float64)
-            st.run(vka, vkb, va, vb, np.arange(m), ok, span)
-            yield pd.DataFrame({"vk_a": vka, "vk_b": vkb,
-                                "audio_okc": ok, "span_ms_c": span})
-    return fn
-
-
 class _TextBoundedMemo(dict):
     # accounted per entry: raw key + normalized copy (str overhead
     # + up to 4 B/char) + lazily-materialized int32 codes array
@@ -238,11 +177,10 @@ class _TextBoundedMemo(dict):
 
 
 class _TextPairState:
-    """Per-partition text verification state — shared by the channel
-    kernel and the fused per-pair kernel (same split: equal-content fast
-    path via one memoized normalize per distinct content, per-pair suffix
-    kernel for unequal contents, plus an oriented (tk_a, tk_b) -> nchars
-    result memo for the fused path's repeated content pairs)."""
+    """Per-partition text verification state for the fused kernel:
+    equal-content fast path via one memoized normalize per distinct
+    content, per-pair suffix kernel for unequal contents, plus an oriented
+    (tk_a, tk_b) -> nchars result memo for repeated content pairs."""
 
     def __init__(self):
         from ..kernels.clipfeat import _text_memo, verify_text_pair
@@ -274,37 +212,13 @@ class _TextPairState:
             nch[i] = r
 
 
-def _text_kernel():
-    """Batched text verification over distinct oriented content pairs —
-    machinery in _TextPairState (shared with the fused kernel)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        st = _TextPairState()
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            tka = pdf["tk_a"].to_numpy()
-            tkb = pdf["tk_b"].to_numpy()
-            ta = pdf["transcript_a"].to_numpy()
-            tb = pdf["transcript_b"].to_numpy()
-            nch = np.zeros(m, dtype=np.int64)
-            st.run(tka, tkb, ta, tb, np.arange(m), nch)
-            yield pd.DataFrame({"tk_a": tka, "tk_b": tkb,
-                                "nchars": nch.astype(np.int32)})
-    return fn
-
-
 def _fused_kernel(cfg: PipelineConfig):
     """Per-pair fused verification: simhash corroboration gates + both
     channel kernels in ONE mapInPandas stage. Gate arithmetic is the
-    NumPy hamming64 kernel — bit-identical to the JVM bit_count(xor)
-    expression the content-dedup path evaluates (the single-node oracle
-    uses the same kernel). Channel work is memoized per oriented content
-    pair via the shared pair-state classes, so an n-member duplicate
-    group still costs O(distinct content pairs) kernel calls per
-    partition, not O(rows)."""
+    NumPy hamming64 kernel the single-node oracle uses. Channel work is
+    memoized per oriented content pair via the pair-state classes, so an
+    n-member duplicate group still costs O(distinct content pairs) kernel
+    calls per partition, not O(rows)."""
     gate = cfg.simhash_gate_bits
     min_chars = cfg.verify_min_chars
 
@@ -349,274 +263,30 @@ def _fused_kernel(cfg: PipelineConfig):
     return fn
 
 
-#: payload broadcast budget for the FUSED verify path: two broadcasts of
-#: the candidate-universe features (with their multi-KB payload columns)
-#: must stay well under executor memory — the gate is a measured BYTE sum
-#: of the payload columns, never a row count
-_PAYLOAD_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
-
-
-def _fused_verify(cand: DataFrame, feats: DataFrame,
-                  cfg: PipelineConfig,
-                  payload_budget: int = _PAYLOAD_BROADCAST_MAX_BYTES,
-                  n_cand: int | None = None) -> DataFrame | None:
-    """Size-gated fused verify: when the candidate-universe payloads fit
-    the broadcast budget, verify runs as ONE fused stage — candidate scan
-    → two broadcast joins → per-pair kernel — with no key-table shuffles,
-    no payload-dedup materializations and no result join-back. Wall at
-    local[32]/100k: the content-dedup path spends ~25% of its stage time
-    on barrier latency across ~40 AQE query-stage jobs (REST metrics,
-    round 4); the fused shape is the round-2 plan those metrics lost to,
-    now with content-pair memoization inside the kernel so the dispatch
-    bound stays O(distinct content pairs) per partition.
-
-    The gate is decided WITHOUT touching the candidate table (round 5):
-
-      1. corpus-total gate — sum/max of the featurize-time pbytes column,
-         ONE slim-column aggregate over the cached features. When the
-         whole corpus's payloads fit the budget the universe trivially
-         does (universe ⊆ corpus), and the broadcasts build straight off
-         the cached features with no semi-join at all.
-      2. candidate-cardinality bound — universe ≤ 2·n_cand clips, so
-         2·n_cand·max(pbytes) is a SOUND upper bound on universe bytes
-         (max, not mean: the universe could be exactly the fattest
-         clips). Fires for sparse corpora at any scale: few candidates
-         over a huge corpus broadcast only the semi-joined universe.
-
-    Everything else returns None — the content-dedup path (payloads
-    shuffled once per distinct content, slim 16-byte keys everywhere
-    else) is the 100 TB shape, and it is also the better shape for the
-    excluded middle (dup-heavy corpora where many pairs concentrate on
-    few contents — exactly what content-dedup exploits). Two prior gate
-    designs are deliberately gone: materializing the universe payloads
-    checkpointed ~GBs at the 400k tier, and the exact pbytes estimate
-    (distinct over ~8M candidate keys + semi-join + collect) measured
-    ~60 s of serial wall at local[8]/400k just to learn 'over budget' —
-    a fixed cost that capped the N→4N ladder.
-    """
-    stats = (feats.agg(
-        F.coalesce(F.sum("pbytes"), F.lit(0)).alias("total"),
-        F.coalesce(F.max("pbytes"), F.lit(0)).alias("mx"))
-        .collect()[0])
-    total, mx = int(stats["total"]), int(stats["mx"])
-    if total <= payload_budget:
-        # whole corpus fits: broadcast every clip's slim+payload row off
-        # the cached features — no candidate scan before the fused stage
-        fsub = feats.select("clip_id", "simhash_audio", "simhash_text",
-                            "vk", "tk", "vpack", "transcript")
-    elif n_cand is not None and 2 * n_cand * mx <= payload_budget:
-        need = (cand.select(F.col("a").alias("clip_id"))
-                .unionByName(cand.select(F.col("b").alias("clip_id"))))
-        # no distinct: duplicate keys don't change a left-semi join, and
-        # the distinct was a full shuffle of the candidate-key table
-        fsub = (feats.select("clip_id", "simhash_audio", "simhash_text",
-                             "vk", "tk", "vpack", "transcript")
-                .join(need, "clip_id", "leftsemi")
-                .localCheckpoint(eager=True))
-    else:
-        return None
-    ren = {"simhash_audio": "sha", "simhash_text": "sht", "vk": "vk",
-           "tk": "tk", "vpack": "vpack", "transcript": "transcript"}
-    fa = F.broadcast(fsub.select(
-        F.col("clip_id").alias("a"),
-        *[F.col(c).alias(f"{n}_a") for c, n in ren.items()]))
-    fb = F.broadcast(fsub.select(
-        F.col("clip_id").alias("b"),
-        *[F.col(c).alias(f"{n}_b") for c, n in ren.items()]))
-    # explicit repartition: the pair table is a few MB of slim rows, so
-    # AQE byte-based coalescing would run the per-ROW-expensive kernel
-    # stage on 1-2 tasks (the documented +24 s pitfall)
-    par = max(cand.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    joined = cand.repartition(par).join(fa, "a").join(fb, "b")
-    res = joined.mapInPandas(_fused_kernel(cfg), VERIFY_SCHEMA)
-    return res.where(F.col("audio_ok") | F.col("text_ok"))
+#: feature columns the kernel reads, renamed per pair side
+_SIDE_COLS = {"simhash_audio": "sha", "simhash_text": "sht", "vk": "vk",
+              "tk": "tk", "vpack": "vpack", "transcript": "transcript"}
 
 
 def verify_candidates(cand: DataFrame, feats: DataFrame,
                       cfg: PipelineConfig = DEFAULT,
                       n_feats: int | None = None,
-                      budget_shares: int = 1,
                       n_cand: int | None = None) -> DataFrame:
     """Candidate pairs + features → confirmed pairs (audio_ok OR text_ok).
 
-    `n_feats` (optional) is the known feature-row count, used only to pick
-    broadcast vs shuffle for the slim side tables — callers that already
-    know it (pipeline stage manifests record per-chunk row counts; bench
-    counts the persisted features) pass it to skip a count() action here.
-    `n_cand` (optional) is the known candidate-pair count (or any upper
-    bound on it); it enables the fused path's sparse-corpus bound without
-    a count() action — see _fused_verify. INVARIANT (soundness, not just
-    accuracy): n_cand must be an UPPER bound on the rows of the `cand`
-    argument actually passed — run_pipeline passes the whole-stage total
-    against per-chunk cand slices (sound: total ≥ any slice); a caller
-    passing a per-chunk count against an unchunked cand would overshoot
-    the broadcast budget with no runtime check. (The keyword is part of
-    the frozen bench.py call surface, hence documented rather than
-    renamed to n_cand_upper.)
-
-    `budget_shares`: number of verify invocations that may MATERIALIZE
-    CONCURRENTLY (run_pipeline runs pair-key chunks in parallel threads).
-    Each invocation's broadcast gates see only its own bytes, so the
-    per-invocation budgets are divided by the share count — otherwise
-    4 concurrent chunks could each pass the 256 MB payload gate and pin
-    ~2 GB of simultaneous payload broadcasts plus eager localCheckpoints.
-
-    Physical strategy is size-adaptive, like AQE's join selection:
-      1. candidate-universe payloads fit the broadcast budget → FUSED
-         single-stage per-pair kernel (_fused_verify);
-      2. slim keys fit → content-dedup path with broadcast key joins;
-      3. nothing fits → content-dedup path, all-shuffle (the 100 TB
-         plan: payloads move once per distinct content, everything else
-         is 16-byte keys).
-    All three produce the identical confirmed set (pytest-forced).
+    `n_feats` and `n_cand` are accepted for call compatibility and unused.
     """
-    shares = max(1, int(budget_shares))
-    payload_budget = _PAYLOAD_BROADCAST_MAX_BYTES // shares
-    slim_budget = _BROADCAST_MAX_BYTES // shares
-    if n_feats is None:
-        n_feats = feats.count()
-    # cheap row-count pre-gate: at a scale where even slim keys exceed
-    # the broadcast budget, don't pay the fused path's payload byte
-    # estimate just to learn the payloads are far bigger still
-    if n_feats * _SLIM_ROW_BYTES <= slim_budget:
-        fused = _fused_verify(cand, feats, cfg,
-                              payload_budget=payload_budget, n_cand=n_cand)
-        if fused is not None:
-            return fused
-    # slim per-clip side table: simhashes + content keys only, straight
-    # off the feature scan (md5 is computed map-side; the multi-KB payload
-    # columns are pruned, so there is nothing to restrict). When the WHOLE
-    # corpus's slim rows fit the byte budget, broadcast them — no
-    # candidate-universe semi-join needed at all (materializing the
-    # payload-wide universe was a measured ~8 s at the 100k tier). Above
-    # the budget, restrict to the candidate universe first and shuffle.
-    # content keys (vk/tk) are computed ONCE by featurize and cached with
-    # the feature rows — no md5 recompute over the multi-KB payloads here
-    slim_all = feats.select("clip_id", "simhash_audio", "simhash_text",
-                            "vk", "tk")
-    if n_feats * _SLIM_ROW_BYTES <= slim_budget:
-        slim, wrap = slim_all, F.broadcast
-    else:
-        need = (cand.select(F.col("a").alias("clip_id"))
-                .unionByName(cand.select(F.col("b").alias("clip_id")))
-                .distinct())
-        slim = slim_all.join(need, "clip_id", "leftsemi")
-        wrap = (lambda df: df)
-    # persist: the a-side and b-side broadcasts would otherwise EACH
-    # re-scan the features and re-md5 every multi-KB payload (scoped:
-    # released when the caller's cache_scope exits post-materialization)
-    slim = scoped_persist(slim)
-    fa = wrap(slim.select(F.col("clip_id").alias("a"),
-                          F.col("simhash_audio").alias("sha_a"),
-                          F.col("simhash_text").alias("sht_a"),
-                          F.col("vk").alias("vk_a"),
-                          F.col("tk").alias("tk_a")))
-    fb = wrap(slim.select(F.col("clip_id").alias("b"),
-                          F.col("simhash_audio").alias("sha_b"),
-                          F.col("simhash_text").alias("sht_b"),
-                          F.col("vk").alias("vk_b"),
-                          F.col("tk").alias("tk_b")))
-    gate = F.lit(cfg.simhash_gate_bits)
-    joined = (cand.join(fa, "a").join(fb, "b")
-              .withColumn("try_audio",
-                          F.col("from_audio")
-                          | (F.bit_count(F.col("sha_a")
-                                         .bitwiseXOR(F.col("sha_b")))
-                             <= gate))
-              .withColumn("try_text",
-                          F.col("from_text")
-                          | (F.bit_count(F.col("sht_a")
-                                         .bitwiseXOR(F.col("sht_b")))
-                             <= gate))
-              .where(F.col("try_audio") | F.col("try_text"))
-              .select("a", "b", "vk_a", "vk_b", "tk_a", "tk_b",
-                      "try_audio", "try_text")
-              # three consumers (audio keys, text keys, final assembly):
-              # materialize the slim pair table once
-              )
-    joined = scoped_persist(joined)
+    fsub = feats.select("clip_id", *_SIDE_COLS)
 
-    # kernel-input parallelism is set EXPLICITLY by core count: the key
-    # tables are a few MB, so AQE's byte-based coalescing would shrink
-    # them to 1-2 partitions — and the downstream per-ROW Python kernel
-    # cost is invisible to AQE (measured: the text kernel ran near-serial,
-    # +24 s at the 100k tier, until this repartition)
-    par = max(cand.sparkSession.sparkContext.defaultParallelism * 2, 8)
+    def side(s: str) -> DataFrame:
+        return fsub.select(F.col("clip_id").alias(s),
+                           *[F.col(c).alias(f"{n}_{s}")
+                             for c, n in _SIDE_COLS.items()])
 
-    # audio channel: distinct oriented content pairs → kernel → results.
-    # The payload table holds one row per distinct PROBED content: a
-    # semi-join on the probed key set filters the feature scan map-side,
-    # then dropDuplicates shuffles only the surviving payloads (map-side
-    # partial agg). No static broadcast hints — AQE sizes the payload
-    # table at runtime (module comment above): at test tiers it
-    # broadcasts into BOTH key joins so the repartitioned key rows keep
-    # their parallelism and payload rows never shuffle; at a scale where
-    # it outgrows the adaptive threshold, the plan degrades to a shuffle
-    # join on 16-byte keys with payloads moving once per distinct content.
-    audio_keys = scoped_persist(joined.where("try_audio")
-                                .select("vk_a", "vk_b").distinct())
-    vk_need = (audio_keys.select(F.col("vk_a").alias("vk"))
-               .unionByName(audio_keys.select(F.col("vk_b").alias("vk")))
-               .distinct())
-    # persist: the payload table broadcasts into BOTH key joins below, and
-    # broadcast exchanges are not plan-identical after aliasing — without
-    # materialization each build re-runs the feature scan, the semi-join
-    # AND the dropDuplicates shuffle (4 heavy stages instead of 2, REST
-    # stage metrics showed the duplicates among the top verify stages)
-    vp_tbl = scoped_persist(
-        feats.select("vk", "vpack")
-        .join(vk_need, "vk", "leftsemi")
-        .dropDuplicates(["vk"]))
-    audio_in = (audio_keys.repartition(par)
-                .join((vp_tbl.select(F.col("vk").alias("vk_a"),
-                                                F.col("vpack")
-                                                .alias("vpack_a"))), "vk_a")
-                .join((vp_tbl.select(F.col("vk").alias("vk_b"),
-                                                F.col("vpack")
-                                                .alias("vpack_b"))), "vk_b"))
-    audio_res = audio_in.mapInPandas(_audio_kernel(cfg), _AUDIO_RES_SCHEMA)
-
-    text_keys = scoped_persist(joined.where("try_text")
-                               .select("tk_a", "tk_b").distinct())
-    tk_need = (text_keys.select(F.col("tk_a").alias("tk"))
-               .unionByName(text_keys.select(F.col("tk_b").alias("tk")))
-               .distinct())
-    tx_tbl = scoped_persist(
-        feats.select("tk", "transcript")
-        .join(tk_need, "tk", "leftsemi")
-        .dropDuplicates(["tk"]))
-    text_in = (text_keys.repartition(par)
-               .join((
-                   tx_tbl.select(F.col("tk").alias("tk_a"),
-                                 F.col("transcript").alias("transcript_a"))),
-                     "tk_a")
-               .join((
-                   tx_tbl.select(F.col("tk").alias("tk_b"),
-                                 F.col("transcript").alias("transcript_b"))),
-                     "tk_b"))
-    text_res = text_in.mapInPandas(_text_kernel(), _TEXT_RES_SCHEMA)
-
-    # join content-level results back to the slim pair table — no static
-    # hints here either: the result tables are bounded by distinct
-    # content pairs, and AQE's 64 MB adaptive threshold (session.py)
-    # broadcast-converts them at runtime when they fit (a static
-    # F.broadcast would be a driver-serial build that grows with the
-    # corpus); at a scale where content-pair results outgrow broadcast,
-    # this is a shuffle join of two slim tables
-    out = (joined
-           .join(audio_res, ["vk_a", "vk_b"], "left")
-           .join(text_res, ["tk_a", "tk_b"], "left")
-           .select(
-               "a", "b",
-               (F.col("try_audio")
-                & F.coalesce("audio_okc", F.lit(False))).alias("audio_ok"),
-               (F.col("try_text")
-                & (F.coalesce("nchars", F.lit(0))
-                   >= F.lit(cfg.verify_min_chars))).alias("text_ok"),
-               F.when(F.col("try_audio"),
-                      F.coalesce("span_ms_c", F.lit(0.0)))
-               .otherwise(F.lit(0.0)).alias("span_ms"),
-               F.when(F.col("try_text"), F.coalesce("nchars", F.lit(0)))
-               .otherwise(F.lit(0)).cast("int").alias("span_chars"))
-           .where(F.col("audio_ok") | F.col("text_ok")))
-    return out
+    # explicit repartition: the pair table is a few MB of slim rows, so
+    # AQE's byte-based coalescing would run the per-ROW-expensive kernel
+    # stage on 1-2 tasks (the documented +24 s pitfall)
+    par = cand.sparkSession.sparkContext.defaultParallelism * 2
+    joined = cand.repartition(par).join(side("a"), "a").join(side("b"), "b")
+    return (joined.mapInPandas(_fused_kernel(cfg), VERIFY_SCHEMA)
+            .where(F.col("audio_ok") | F.col("text_ok")))

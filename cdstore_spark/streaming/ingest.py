@@ -49,7 +49,7 @@ BAND_INDEX_BUCKETS = 16
 #: partitioning) — ensure_incremental_run then rebuilds instead of serving
 #: a stale-layout cache. Independent of ENGINE_LAYOUT_VERSION, which tracks
 #: featurize schema/semantics.
-STREAM_LAYOUT_VERSION = 5
+STREAM_LAYOUT_VERSION = 6
 
 #: compact the band index once this many epoch partitions accumulate above
 #: the newest base layer — an always-on stream otherwise accrues one
@@ -363,7 +363,7 @@ def incremental_dedup_ingest(spark: SparkSession, input_dir: str,
 
             from pyspark import inheritable_thread_target
             with ThreadPoolExecutor(max_workers=3) as pool:
-                futs = [pool.submit(inheritable_thread_target(fn))
+                futs = [pool.submit(inheritable_thread_target(spark_l)(fn))
                         for fn in (_write_pairs, _write_bands,
                                    _write_feats)]
                 for f in futs:

@@ -12,7 +12,7 @@ sys.path.insert(0, REPO)
 @pytest.fixture(scope="session")
 def spark():
     from cdstore_spark.engine.session import get_spark
-    s = get_spark("pytest", parallelism=8)
+    s = get_spark("pytest")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -100,55 +100,42 @@ class TestEngineMatchesOracle:
 
 class TestVerifyShuffleFallback:
     def test_forced_shuffle_plan_matches_broadcast_path(
-            self, spark, smoke_golden, monkeypatch):
-        """The documented at-scale verify plan — candidate-universe
-        semi-join + shuffle joins instead of broadcast builds — must
-        produce the IDENTICAL confirmed set. Forced by shrinking the
-        broadcast budget to zero, dropping the explicit hints, and
-        disabling the session's auto-broadcast thresholds so AQE cannot
-        quietly re-broadcast the small sides."""
+            self, spark, smoke_golden):
+        """The at-scale verify plan — shuffle joins instead of broadcast
+        builds — must produce the IDENTICAL confirmed set. Forced by
+        disabling the session's auto-broadcast thresholds, so neither the
+        static planner nor AQE can broadcast the feature projection. The
+        plan persists nothing: called outside any cache_scope it must
+        leave no cached RDD behind."""
         from cdstore_spark.engine import candidates as S_cand
         from cdstore_spark.engine import verify as S_verify
-        from cdstore_spark.engine.scope import cache_scope
 
         feats = S_feat.featurize_from_parquet(
             spark, golden.clips_path("smoke"), CFG).persist()
         cand, _ = S_cand.candidate_pairs(feats, CFG)
         cand = cand.persist()
         cand.count()
+        sc = spark.sparkContext._jsc.sc()
 
-        def run(**kw):
-            with cache_scope():
-                df = S_verify.verify_candidates(cand, feats, CFG, **kw)
-                pdf = df.toPandas()
-                plan = df._jdf.queryExecution().executedPlan().toString()
-            key = ["a", "b"]
-            return (pdf.sort_values(key).reset_index(drop=True), plan)
+        def persisted() -> set[int]:
+            it = sc.getPersistentRDDs().keySet().toList()
+            return {int(it.apply(i)) for i in range(it.size())}
+
+        def run():
+            df = S_verify.verify_candidates(cand, feats, CFG)
+            pdf = df.toPandas()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            return (pdf.sort_values(["a", "b"]).reset_index(drop=True),
+                    plan)
 
         base_pdf, base_plan = run()
         assert "BroadcastHashJoin" in base_plan   # the default fast path
-        # default at this tier = the FUSED single-stage path
-        assert "FlatMapGroupsInPandas" not in base_plan
 
-        # budget_shares divides the per-invocation broadcast budgets (the
-        # concurrent-chunk memory bound): an absurd share count must push
-        # strategy selection off the fused/broadcast paths while producing
-        # the identical confirmed set
-        shared_pdf, _ = run(budget_shares=1 << 30)
-        pd.testing.assert_frame_equal(base_pdf, shared_pdf)
-
-        # middle strategy: payloads over budget, slim keys under it —
-        # the content-dedup path with broadcast key joins
-        monkeypatch.setattr(S_verify, "_PAYLOAD_BROADCAST_MAX_BYTES", -1)
-        mid_pdf, mid_plan = run()
-        assert "BroadcastHashJoin" in mid_plan
-        pd.testing.assert_frame_equal(base_pdf, mid_pdf)
-
-        monkeypatch.setattr(S_verify, "_BROADCAST_MAX_BYTES", 0)
         conf = spark.conf
         keys = ("spark.sql.autoBroadcastJoinThreshold",
                 "spark.sql.adaptive.autoBroadcastJoinThreshold")
         saved = {k: conf.get(k, None) for k in keys}
+        before = persisted()
         try:
             for k in keys:
                 conf.set(k, "-1")
@@ -161,6 +148,7 @@ class TestVerifyShuffleFallback:
                     conf.set(k, v)
         assert "BroadcastHashJoin" not in forced_plan, forced_plan[:2000]
         pd.testing.assert_frame_equal(base_pdf, forced_pdf)
+        assert persisted() - before == set()
         feats.unpersist()
         cand.unpersist()
 

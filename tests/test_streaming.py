@@ -51,6 +51,23 @@ class TestIncrementalIngest:
         assert spark.read.parquet(
             os.path.join(state, "features")).count() == 120
 
+    def test_write_pool_passes_session(self, spark, staged_clips,
+                                       tmp_path):
+        """An epoch's concurrent writes run on pool threads wrapped with
+        the batch's session, so pyspark has no reason to warn that job
+        tags will not be inherited."""
+        import warnings
+
+        from cdstore_spark.streaming.ingest import incremental_dedup_ingest
+        in_dir, _ = staged_clips
+        with warnings.catch_warnings(record=True) as rec:
+            warnings.simplefilter("always")
+            q = incremental_dedup_ingest(spark, in_dir,
+                                         str(tmp_path / "state"))
+            q.awaitTermination(300)
+        msgs = [str(w.message) for w in rec]
+        assert not [m for m in msgs if "Tags will not be inherited" in m]
+
     def test_epoch_replay_does_not_duplicate(self, spark, staged_clips,
                                              tmp_path):
         """Simulated retry: wipe ONLY the streaming checkpoint so every
