@@ -44,9 +44,11 @@ from pyspark.sql import functions as F
 #: union-find + labels over 555k edges in 0.88 s (measured), so the
 #: bench-tier confirmed set (568,883 edges) and the doc hot-group edge
 #: set (629,359) now skip the distributed large_star round entirely
-#: (~3.2 s at local[32], far more at local[2]); the Arrow collect of a
-#: full 2^20-edge set is ~50 MB against a 24 GB driver — still a fixed,
-#: scale-independent budget.
+#: (~3.2 s at local[32], far more at local[2]). The Arrow collect of a
+#: full 2^20-edge set is ~50 MB, and a 2^20-edge local finish completes
+#: under a 1g driver heap, the smallest one session.py picks (4 cores:
+#: 19-22 s with long ids, 24-73 s with 17-char string ids), so one fixed,
+#: scale-independent gate fits every heap.
 _LOCAL_FINISH_MAX_EDGES = 1 << 20
 
 #: when the CURRENT edge set is within this factor of the local-finish
@@ -231,8 +233,8 @@ def _local_finish(edges: DataFrame) -> DataFrame:
 
     spark = edges.sparkSession
     # toPandas, not collect(): one Arrow transfer instead of materializing
-    # up to 2^18 pickled Row objects driver-side. tolist() hands the
-    # dict-based kernel plain str/int keys.
+    # up to _LOCAL_FINISH_MAX_EDGES (2^20) pickled Row objects
+    # driver-side. tolist() hands the dict-based kernel plain str/int keys.
     pdf_e = edges.toPandas()
     us = pdf_e.iloc[:, 0].tolist()
     vs = pdf_e.iloc[:, 1].tolist()

@@ -74,8 +74,8 @@ def _with_content_keys(df: DataFrame) -> DataFrame:
 
 
 def load_clips(spark: SparkSession, path: str) -> DataFrame:
-    """S1: columnar scan of the clips table (Iceberg on a real cluster;
-    parquet fallback here — storage.py abstracts the two)."""
+    """S1: columnar scan of the clips table, a parquet path (the only
+    storage backend; see engine/snapshot.py)."""
     return spark.read.schema(CLIP_SCHEMA).parquet(path)
 
 

@@ -13,11 +13,10 @@ Graft of CDStore's container/recipe persistence + upload resumability
     (BASELINE.json north_star), and the resumed output is byte-identical
     because chunk membership is a pure hash of the stage key.
 
-On a real cluster the same API is backed by Iceberg append snapshots
-(`write.target-file-size-bytes`, snapshot-id manifest); the Iceberg runtime
-jar is absent in this sandbox (SURVEY.md §0), so the parquet+manifest
-backend is the tested path and the Iceberg one is import-guarded in
-storage.py.
+Parquet+manifest is the only storage backend. An Iceberg backend (append
+snapshots, snapshot-id manifest) waits until the iceberg-spark-runtime jar
+is part of the repo's toolchain; until then nothing reads or writes
+Iceberg tables.
 """
 
 from __future__ import annotations

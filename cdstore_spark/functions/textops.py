@@ -35,18 +35,6 @@ def _tokens(df: DataFrame) -> DataFrame:
                      F.split(F.lower(F.col("text")), r"\s+").alias("toks"))
 
 
-def doc_ngrams(df: DataFrame, n: int = NGRAM) -> DataFrame:
-    """(doc_id, gram) distinct word n-grams — the shared shingle base."""
-    t = _tokens(df).where(F.size("toks") >= n)
-    return (t.select("doc_id", "toks",
-                     F.explode(F.sequence(F.lit(0), F.size("toks") - n))
-                     .alias("i"))
-            .select("doc_id",
-                    F.concat_ws(" ", *[F.element_at("toks", F.col("i") + 1 + k)
-                                       for k in range(n)]).alias("gram"))
-            .distinct())
-
-
 def _gram_hashed(df: DataFrame, n: int = NGRAM) -> DataFrame:
     """(doc_id, ghs): ONE row per doc with >= n tokens, `ghs` the sorted,
     distinct array of its hashed word n-grams — the single gram
@@ -54,8 +42,8 @@ def _gram_hashed(df: DataFrame, n: int = NGRAM) -> DataFrame:
     (transform over token positions, no explode), so no downstream
     exchange moves raw n-gram strings and no gram-keyed row exists until a
     caller that needs one (document frequencies, the prefix join) explodes
-    `ghs` itself. Sorted so equal gram sets give equal arrays (the content
-    key in _pair_jaccard hashes the array as is)."""
+    `ghs` itself. Sorted and distinct, so the array is a canonical form of
+    the gram set: equal sets give equal arrays, and its size is |A|."""
     t = _tokens(df).where(F.size("toks") >= n)
     gram = lambda i: F.concat_ws(  # noqa: E731
         " ", *[F.element_at("toks", i + 1 + k) for k in range(n)])
@@ -94,50 +82,22 @@ def _pair_jaccard(cand: DataFrame, g: DataFrame,
     doc. The intersection of two such arrays is the intersection of the
     two gram sets, so |A ∩ B| = size(array_intersect(ghs_a, ghs_b)) and
     J = |A ∩ B| / (|A| + |B| - |A ∩ B|), per row — the sorted-set
-    intersection of HERO (SIGMOD'24). Work is linear in |cand| x
-    grams-per-doc, with no join on gram hash. This is the shared
-    verification tail of both the prefix-filtered exact path and the
-    MinHash-LSH path.
-
-    Work is deduplicated per distinct CONTENT pair (the same idea as the
-    audio verify stage): Jaccard is a pure function of the two gram SETS,
-    and dup-heavy corpora repeat the same set across many pairs — a
-    planted 5k-member hot group yields 629,359 candidate pairs that are
-    all ONE content pair. Each doc gets a 128-bit content key (md5 over
-    its sorted gram hashes), the intersection runs on one representative
-    pair per distinct (ka, kb), and results join back to the full pair
-    list. Identical output: key-equal docs have equal gram sets by
-    construction, so every pair sharing (ka, kb) has the same Jaccard.
+    intersection of HERO (SIGMOD'24). Each candidate pair joins its two
+    arrays (on `a`, then on `b`) and is scored once: work is linear in
+    |cand| x grams-per-doc, with no join on gram hash and no key that two
+    different gram sets could share. This is the shared verification tail
+    of both the prefix-filtered exact path and the MinHash-LSH path.
     """
-    from ..engine.scope import scoped_persist
-    # persisted: the key joins of kand and the array joins of rep both
-    # read it, and uncached each would re-tokenize and re-hash the docs
-    ks = scoped_persist(g.select(
-        "doc_id", "ghs",
-        F.md5(F.concat_ws(",", F.transform(
-            "ghs", lambda x: x.cast("string")))).alias("ck")))
-    kand = scoped_persist(
-        cand.join(ks.select(F.col("doc_id").alias("a"),
-                            F.col("ck").alias("ka")), "a")
-        .join(ks.select(F.col("doc_id").alias("b"),
-                        F.col("ck").alias("kb")), "b"))
-    rep = (kand.groupBy("ka", "kb")
-           .agg(F.min(F.struct("a", "b")).alias("r"))
-           .select(F.col("r.a").alias("a"), F.col("r.b").alias("b"),
-                   "ka", "kb")
-           .join(ks.select(F.col("doc_id").alias("a"),
-                           F.col("ghs").alias("ghs_a")), "a")
-           .join(ks.select(F.col("doc_id").alias("b"),
-                           F.col("ghs").alias("ghs_b")), "b"))
+    ghs = lambda side: g.select(  # noqa: E731
+        F.col("doc_id").alias(side), F.col("ghs").alias(f"ghs_{side}"))
     inter = F.size(F.array_intersect("ghs_a", "ghs_b"))
-    res = (rep.select("ka", "kb", (inter / (F.size("ghs_a") + F.size("ghs_b")
-                                            - inter)).alias("j"))
-           .where(F.col("j") >= threshold)     # threshold on the raw value
-           .select("ka", "kb", (F.floor(F.col("j") * F.lit(1e6) + F.lit(0.5))
-                                / F.lit(1e6)).alias("jaccard")))
-    # representative results → every pair sharing the content-key pair
-    return (kand.join(res, ["ka", "kb"])
-            .select("a", "b", "jaccard"))
+    return (cand.select("a", "b")
+            .join(ghs("a"), "a")
+            .join(ghs("b"), "b")
+            .select("a", "b", (inter / (F.size("ghs_a") + F.size("ghs_b")
+                                        - inter)).alias("j"))
+            .where(F.col("j") >= threshold)    # threshold on the raw value
+            .select("a", "b", _round6(F.col("j")).alias("jaccard")))
 
 
 def prefix_candidates(g: DataFrame, threshold: float = JACCARD_THRESHOLD

@@ -3,7 +3,7 @@
     zip -r cdstore_spark.zip cdstore_spark
     spark-submit --py-files cdstore_spark.zip \
         [--master yarn|k8s://... --num-executors N ...] \
-        jobs/run_dedup.py --input <clips parquet dir | iceberg table> \
+        jobs/run_dedup.py --input <clips parquet dir> \
         --workdir <checkpoint/lineage dir> [--chunks 16]
 
 Runs the full checkpointed pipeline (S1..S10). A killed run re-submitted
@@ -22,8 +22,8 @@ import time
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True,
-                    help="clips parquet path (or Iceberg table on clusters "
-                         "with the runtime jar — engine/storage.py)")
+                    help="clips parquet path (a directory of parquet "
+                         "files; the only supported input)")
     ap.add_argument("--workdir", required=True,
                     help="snapshot/lineage/resume directory")
     ap.add_argument("--chunks", type=int, default=16,

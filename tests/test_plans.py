@@ -66,3 +66,29 @@ class TestPlans:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
+
+    def test_doc_jaccard_tail_is_per_pair(self, spark):
+        """Exact doc Jaccard scores each candidate pair from its two
+        gram-hash arrays: no content key (md5) in the plan, and only the
+        candidate joins plus the two per-pair array joins. The static plan
+        (AQE off) is the one Spark compiles before any runtime rewrite."""
+        import re
+
+        from cdstore_spark.engine.scope import cache_scope
+        from cdstore_spark.functions import textops as X
+        from cdstore_spark.golden_funcs import SF_DIR
+        joins = re.compile(r"\b(SortMergeJoin|BroadcastHashJoin|"
+                           r"ShuffledHashJoin|BroadcastNestedLoopJoin|"
+                           r"CartesianProduct)\b")
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            for fn in (X.jaccard_pairs, X.minhash_lsh_pairs):
+                with cache_scope():
+                    plan = (fn(docs)._jdf.queryExecution().executedPlan()
+                            .toString())
+                assert "md5" not in plan, fn.__name__
+                assert len(joins.findall(plan)) <= 5, (fn.__name__, plan)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
