@@ -79,7 +79,7 @@ def _spark(cpus: int):
     # cost, not job cost, and belongs with the rest of this warmup.
     from cdstore_spark.engine.bucket_pairs import capped_bucket_pairs
     tiny = s.createDataFrame([(1, 0), (1, 1), (2, 0), (2, 1), (2, 2)],
-                             "k int, m int")  # small + triangle + chain
+                             "k int, m int")  # small + hot, 2 sub-buckets
     capped_bucket_pairs(tiny, ["k"], "m", cap=2, soft=2).count()
     return s
 

@@ -66,7 +66,9 @@ class PipelineConfig:
     empty_sentinel: int = 0xFFFFFFFFFFFFFFFF
 
     # --- S6 candidate join / skew handling -----------------------------------
-    # buckets larger than this are triangle-split into blocks for balance
+    # buckets larger than this are cut into one row per sub-bucket and
+    # spread over all cores before their pairs are enumerated; buckets up
+    # to this size enumerate their pairs where they were aggregated
     bucket_soft: int = 32
     # skew split: buckets larger than this are partitioned into sub-buckets
     # of <= bucket_cap members (deterministic clip_id order); pairs are

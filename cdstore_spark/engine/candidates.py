@@ -1,4 +1,4 @@
-"""S5–S6: LSH band explode → salted repartition-then-hash-join with explicit
+"""S5–S6: LSH band explode → per-bucket member aggregation with explicit
 skew-key splitting → canonical candidate pairs.
 
 This is the shuffle heart of the pipeline — the graft analog of CDStore's
@@ -20,16 +20,17 @@ the document-channel MinHash-LSH / SimHash candidate joins:
    10^12-row scale a hot bucket therefore cannot produce an O(m²) shuffle
    explosion, and nothing is silently dropped: skew_stats reports bucket
    maxima and split counts.
-2. **Triangle block split** (bucket_soft): each (sub-)bucket above
-   `bucket_soft` members is further split into g = ceil(size/soft) blocks;
-   each (i <= j) block pair becomes its own join key, so one hot bucket
-   fans out over g(g+1)/2 shuffle partitions instead of landing on one
-   reducer. Every pair is still enumerated exactly once (cross pairs
-   appear only under key (i, j) with i = block(a) <= j = block(b); the
-   a < b filter dedups within-block keys). This is the "salted
-   repartition-then-hash-join" of the north rule — the salt is the
-   (sub-bucket, block-pair) id, and the join shuffle hashes on
-   (channel, band_idx, band_hash, sub, i, j).
+2. **Hot-bucket spread** (bucket_soft): a bucket of <= `bucket_soft`
+   members enumerates its pairs in place, in the partition that
+   aggregated it. A bucket above `bucket_soft` becomes one row per
+   sub-bucket, and a repartition pinned at 2×defaultParallelism hashes
+   those rows on (channel, sub-bucket head, sub-bucket index) — the salt
+   of the north rule's salted repartition — so one hot bucket fans out
+   over all cores instead of landing on the one reducer that aggregated
+   it. Each pair is still enumerated once per bucket. The skew_stats
+   column `buckets_block_split` keeps its name and still counts the
+   buckets above `bucket_soft`: they are the buckets that take this
+   spread path.
 
 Both layers use the same deterministic member order as the single-node
 oracle (sorted clip_id), so engine and oracle enumerate identical candidate
@@ -117,14 +118,14 @@ def candidate_pairs(feats: DataFrame, cfg: PipelineConfig = DEFAULT
 
     # the two-layer skew split itself lives in bucket_pairs.py (shared with
     # the document MinHash-LSH / SimHash joins). Per-bucket member ranking
-    # is groupBy + sort_array + posexplode: one hash aggregation with
-    # per-group array sorts, measured ~1.6x faster than the equivalent
-    # double window at 6.4M band rows — identical (rn, cnt) by construction
-    # since members are sorted clip_id order, matching the oracle's capping
-    # order. Memory bound: collect_list buffers one bucket's members in one
-    # agg buffer (~10 B/member) — fine to ~10^7 members/bucket; a bucket
-    # hot enough to breach that is already generating O(m*cap) pairs and
-    # needs an upstream policy cap, not a sort.
+    # is groupBy + sort_array: one hash aggregation with per-group array
+    # sorts, measured ~1.6x faster than the equivalent double window at
+    # 6.4M band rows — members come out in sorted clip_id order, matching
+    # the oracle's capping order. Memory bound: collect_list buffers one
+    # bucket's members in one agg buffer (~10 B/member) — fine to ~10^7
+    # members/bucket; a bucket hot enough to breach that is already
+    # generating O(m*cap) pairs and needs an upstream policy cap, not a
+    # sort.
     # dedup_key=["channel"]: the groupBy below collapses (band_idx,
     # band_hash) anyway, so hot buckets repeating the same member set
     # across bands (the near-silence sentinel bucket fills one identical

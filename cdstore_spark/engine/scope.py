@@ -11,8 +11,9 @@ MEMORY_AND_DISK disk blocks are not LRU-reclaimed.
 DataFrame with the innermost active `cache_scope()` on this thread; when
 the scope exits (after the caller has materialized the consuming plan),
 every registered cache is released. With no active scope the behavior is
-exactly `df.persist()` — lazy library code never has to know whether its
-caller manages lifetimes.
+`df.persist()` plus a RuntimeWarning: nothing will ever release that cache,
+so a long-lived session leaks it, and the warning names the call site
+instead of leaving the leak silent.
 
 Scopes are a thread-local stack: nested scopes release only their own
 registrations, and concurrently-running stages (e.g. verify chunks
@@ -22,6 +23,7 @@ submitted from a thread pool) each get independent stacks.
 from __future__ import annotations
 
 import threading
+import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
@@ -37,11 +39,16 @@ def _stack() -> list[list[DataFrame]]:
 
 
 def scoped_persist(df: DataFrame) -> DataFrame:
-    """persist() + register with the innermost active scope (if any)."""
+    """persist() + register with the innermost active scope; warns when
+    no scope is active (the cache is then never released)."""
     df = df.persist()
     s = _stack()
     if s:
         s[-1].append(df)
+    else:
+        warnings.warn("scoped_persist() outside any cache_scope(): this "
+                      "cache is never released", RuntimeWarning,
+                      stacklevel=2)
     return df
 
 

@@ -132,8 +132,7 @@ def cosine_pairs_exact(df: DataFrame, threshold: float = 0.4,
     """Exact embedding-cosine near-dup pairs (cos >= threshold).
 
     All-pairs cosine is inherently quadratic; the scale question is only
-    how the O(n^2/2) work is SPREAD. Triangle block-pair enumeration
-    (same shape as the audio candidate join, engine/candidates.py): each
+    how the O(n^2/2) work is SPREAD. Triangle block-pair enumeration: each
     vector lands in block vec_id % B, every (i <= j) block pair becomes
     one join key, so the work fans out over B(B+1)/2 balanced shuffle
     partitions instead of one reducer — no cartesian product node, no

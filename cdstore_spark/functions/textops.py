@@ -250,8 +250,8 @@ def minhash_lsh_pairs(df: DataFrame, cfg: PipelineConfig = DEFAULT,
     up to the documented ~5e-9 LSH miss probability, which is what lets the
     DuckDB exact-Jaccard self-join serve as its oracle.
 
-    Skew bound: band buckets are enumerated through the same sub-bucket +
-    triangle split as the audio candidate join (engine/bucket_pairs.py),
+    Skew bound: band buckets are enumerated through the same capped
+    sub-bucket split as the audio candidate join (engine/bucket_pairs.py),
     so a band bucket of m members yields O(m·bucket_cap) candidates
     instead of O(m²) — on a dup-heavy corpus (a million identical docs
     all land in one (band_idx, bh) bucket) the candidate join stays
@@ -303,7 +303,7 @@ def simhash_hamming_pairs(df: DataFrame, cfg: PipelineConfig = DEFAULT,
     included for parity with SimHash-based dedup literature, while the
     MinHash-LSH path is the 10^12-scale citizen. Output: (a, b, hamming).
 
-    Block buckets go through the shared sub-bucket + triangle skew split
+    Block buckets go through the shared capped sub-bucket skew split
     (engine/bucket_pairs.py) — the member is a (doc_id, simhash) struct
     (sorted/canonicalized by its unique leading doc_id), so the hamming
     distance is computed from the pair row itself with no re-join.

@@ -195,6 +195,21 @@ class TestCacheHygiene:
                 left.append((t._1(), t._2().toString()[:120]))
         assert left == [], f"leaked cached RDDs: {left}"
 
+    def test_scoped_persist_warns_outside_scope(self, spark):
+        """A persist that no cache_scope() will release leaks in a long-
+        lived session, so scoped_persist warns outside a scope and is
+        silent inside one."""
+        import warnings
+
+        from cdstore_spark.engine.scope import cache_scope, scoped_persist
+        df = spark.range(3)
+        with pytest.warns(RuntimeWarning, match="cache_scope"):
+            scoped_persist(df).unpersist()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            with cache_scope():
+                scoped_persist(df)
+
 
 class TestConnectedComponents:
     @pytest.mark.parametrize("seed", [0, 1, 2])

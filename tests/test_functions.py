@@ -223,9 +223,9 @@ class TestBucketPairs:
     """The shared skew-bounded enumerator (engine/bucket_pairs.py)."""
 
     # bucket sizes straddle every physical-path boundary: the in-place
-    # small-bucket path (<= soft), the triangle block join (soft < n <=
-    # cap, including n == soft + 1 and n == cap exactly) and the
-    # sub-bucket + representative chain (n > cap)
+    # small-bucket path (<= soft), the spread hot path with one sub-bucket
+    # row (soft < n <= cap, including n == soft + 1 and n == cap exactly)
+    # and with several sub-bucket rows + the representative chain (n > cap)
     _SIZES = [2, 15, 16, 17, 64, 65]
 
     def test_exact_below_cap(self, spark):
@@ -259,6 +259,46 @@ class TestBucketPairs:
         assert len(got) < m * (m - 1) // 2 / 4       # ≪ quadratic
         comp = unionfind.components(list(got), members)
         assert len(set(comp.values())) == 1          # still one component
+
+    def test_hot_buckets_build_no_job_and_plan_no_join(self, spark):
+        """Three hot buckets, two sharing one 40-member set: building the
+        plan starts no Spark job, the static plan (AQE off) has no join,
+        and the rows are the mirror's pairs with no duplicate — under
+        dedup_key=[] the shared set is enumerated once."""
+        import re
+
+        from cdstore_spark.engine.bucket_pairs import capped_bucket_pairs
+        from cdstore_spark.engine.scope import cache_scope
+        shared = [f"s{i:02d}" for i in range(40)]
+        other = [f"t{i:02d}" for i in range(30)]
+        df = spark.createDataFrame(
+            [(0, x) for x in shared] + [(1, x) for x in shared]
+            + [(2, x) for x in other], "k int, member string")
+        sc = spark.sparkContext
+        group = "test_hot_buckets_build"
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            with cache_scope():
+                sc.setJobGroup(group, group)
+                try:
+                    out = capped_bucket_pairs(df, ["k"], "member", cap=16,
+                                              soft=8, dedup_key=[])
+                    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+                    plan = out._jdf.queryExecution().executedPlan().toString()
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setLocalProperty("spark.job.description", None)
+                rows = [tuple(r) for r in out.select("a", "b").collect()]
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        assert jobs == []
+        assert not re.search(r"\b(SortMergeJoin|BroadcastHashJoin|"
+                             r"ShuffledHashJoin|BroadcastNestedLoopJoin|"
+                             r"CartesianProduct)\b", plan), plan
+        assert len(rows) == len(set(rows))
+        assert set(rows) == (_mirror_capped_pairs(shared, 16)
+                             | _mirror_capped_pairs(other, 16))
 
     def test_doc_lsh_and_simhash_plans_have_no_window(self, spark):
         # regression guard (mirrors test_plans.py's audio-path guard): the
@@ -427,7 +467,7 @@ class TestTextops:
 
     def test_minhash_lsh_hot_band_stays_linear(self, spark):
         """Planted hot band: 300 identical docs all collide in one
-        (band_idx, bh) bucket per band. The shared sub-bucket/triangle
+        (band_idx, bh) bucket per band. The shared capped sub-bucket
         split must keep the candidate (and thus the confirmed-pair)
         count LINEAR in bucket size — O(m·cap), not O(m²) — while the
         representative chain keeps the duplicate group one connected
