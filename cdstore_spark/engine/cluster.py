@@ -203,6 +203,12 @@ def connected_components(pairs: DataFrame, universe: DataFrame,
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        # the unconverged edge set is not a forest of stars: its labels
+        # would silently split components
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            f"({prev_sig[0]} edges after the last round)")
     # checkpoint RDDs are GC-managed — nothing to release at exit, and
     # downstream consumers read shallow plans
     if labels is None:
@@ -238,15 +244,7 @@ def _local_finish(edges: DataFrame) -> DataFrame:
     pdf_e = edges.toPandas()
     us = pdf_e.iloc[:, 0].tolist()
     vs = pdf_e.iloc[:, 1].tolist()
-    uf = K_uf.UnionFind()
-    for u, v in zip(us, vs):
-        uf.union(u, v)
-    out = {}
-    for u, v in zip(us, vs):
-        if u not in out:
-            out[u] = uf.find(u)
-        if v not in out:
-            out[v] = uf.find(v)
+    out = K_uf.components(zip(us, vs), dict.fromkeys(us + vs))
     pdf = pd.DataFrame({"clip_id": list(out.keys()),
                         "cluster_id": list(out.values())})
     # label type follows the node id type (audio clip_ids are strings, doc

@@ -16,10 +16,15 @@ byte budget of its own.
 Work is deduplicated inside the kernel, not in the dataflow. Near-dup
 corpora repeat the same (event stream, transcript) contents across many
 candidate pairs, and both channel kernels are pure functions of the
-contents, so each partition memoizes results per oriented content-key
-pair. Orientation is preserved (no least/greatest on content keys):
-span_ms sums the A side's durations over the matched run, so swapping
-roles can flip audio_ok near the span threshold.
+contents, so each partition runs them once per oriented content-key pair
+(_per_content_pair) and every memo is one byte-budgeted type (_Memo).
+Orientation is preserved (no least/greatest on content keys): span_ms
+sums the A side's durations over the matched run, so swapping roles can
+flip audio_ok near the span threshold. Identical contents and streams
+below verify_min_events need no engine-side shortcut: the kernels answer
+them with their own early returns (equal event arrays / equal normalized
+transcripts; the event-count check), and the memo collapses an n-member
+exact-duplicate group to one call.
 
 The SimHash gate (from_channel LSH provenance OR channel simhash Hamming
 <= gate bits) uses the NumPy hamming64 kernel the single-node oracle uses.
@@ -45,180 +50,96 @@ VERIFY_SCHEMA = T.StructType([
     T.StructField("span_chars", T.IntegerType()),
 ])
 
-#: per-partition content-memo BYTE budget — each content appears in many
-#: pairs, so the kernels cache per-content preprocessing (event unpack /
-#: transcript normalize+codes) keyed by content. The budget is in payload
+#: per-partition memo BYTE budget, shared by every memo of the kernel:
+#: each content appears in many pairs, so the kernels cache per-content
+#: preprocessing (event unpack / transcript normalize+codes) keyed by
+#: content, and results keyed by content pair. The budget is in payload
 #: bytes, not entries (multi-KB contents × a fixed entry count would be
-#: ~GBs per task at production partition sizes); clear() past it keeps
-#: worker memory flat on arbitrarily large partitions, checked per insert
+#: ~GBs per task at production partition sizes); clearing past it keeps
+#: worker memory flat on arbitrarily large partitions
 _MEMO_MAX_BYTES = 64 * 1024 * 1024
 
 
-class _AudioPairState:
-    """Per-partition audio verification state for the fused kernel:
+class _Memo(dict):
+    """A dict that clears itself once its charged bytes pass
+    _MEMO_MAX_BYTES. `charge(key, value)` estimates one entry's bytes; it
+    is charged in __setitem__, so lazily-filled values (the text memo's
+    in-place list mutations) are budgeted up front."""
 
-      * length gate — event counts read straight from the 4-byte pack
-        header (no unpack, no memo traffic) for every row at once;
-      * equal-content fast path — vk_a == vk_b means identical event
-        streams, where verify_audio_pair's answer is analytically
-        (span >= min_ms, span = full float32 ms sum) since the common run
-        is the whole sequence and the ZCR gap is exactly 0 <= tol. The
-        float32 pairwise sum matches the kernel's ms_a[0:n].sum()
-        bit-for-bit; the per-content span is memoized so an n-member
-        exact-duplicate group costs n sums, not n^2 kernel calls;
-      * result memo — oriented (vk_a, vk_b) -> (ok, span): the same
-        content pair recurs across rows of a partition, and the kernels
-        are pure functions of content. Both the span and result memos are
-        BYTE-budgeted against _MEMO_MAX_BYTES like the unpack memo
-        (~200 B/entry approximation charged per insert) — entry-count
-        caps alone would admit hundreds of MB of tuple/dict overhead
-        per concurrently-running kernel task before clearing.
-
-    Only surviving unequal unseen pairs reach the suffix-array kernel.
-    """
-
-    def __init__(self, cfg: PipelineConfig):
-        import numpy as np
-
-        from ..kernels.clipfeat import unpack_events, verify_audio_pair
-        from ..kernels.suffix import lcs_prefix
-        self._np = np
-        self._unpack_events = unpack_events
-        self._verify_audio_pair = verify_audio_pair
-        self._lcs_prefix = lcs_prefix
-        self.cfg = cfg
-        self.min_ev = cfg.verify_min_events
-        self.min_ms = cfg.verify_min_audio_ms
-        assert cfg.verify_zcr_log2_tol >= 0.0
-        self.unp: dict = {}
+    def __init__(self, charge):
+        super().__init__()
+        self.charge = charge
         self.used = 0
-        self.spans: dict = {}   # vk -> full-stream float32 ms sum
-        self.spans_used = 0
-        self.res: dict = {}     # (vk_a, vk_b) -> (ok, span)
-        self.res_used = 0
-
-    def get(self, k, buf):
-        r = self.unp.get(k)
-        if r is None:
-            if self.used > _MEMO_MAX_BYTES:
-                self.unp.clear()
-                self.used = 0
-            ev, ms, zc = self._unpack_events(buf)
-            # prefix hashes memoized WITH the content: the O(n) LCS
-            # preprocessing runs once per distinct content, not per
-            # pair (bit-identical — lcs_prefix is what the kernel
-            # computes itself when not supplied)
-            r = self.unp[k] = (ev, ms, zc,
-                               self._lcs_prefix(ev.astype(self._np.int64)))
-            # frombuffer views pin buf; account the packed source size
-            # + the 8 B/event prefix array
-            self.used += len(buf) + 8 * (ev.shape[0] + 1) + 64
-        return r
-
-    def run(self, vka, vkb, va, vb, idx, ok, span):
-        """Verify rows `idx` of the batch arrays in place: ok[i]/span[i]
-        for each i in idx, with all three memo layers applied."""
-        np = self._np
-        m = len(vka)
-        na = np.fromiter((int.from_bytes(b[:4], "little") for b in va),
-                         dtype=np.int64, count=m)
-        nb = np.fromiter((int.from_bytes(b[:4], "little") for b in vb),
-                         dtype=np.int64, count=m)
-        sel = np.zeros(m, dtype=bool)
-        sel[idx] = True
-        alive = sel & (na >= self.min_ev) & (nb >= self.min_ev)
-        eq = alive & (vka == vkb)
-        for i in np.flatnonzero(eq):
-            k = vka[i]
-            s = self.spans.get(k)
-            if s is None:
-                if self.spans_used > _MEMO_MAX_BYTES:
-                    self.spans.clear()
-                    self.spans_used = 0
-                n = int(na[i])
-                s = self.spans[k] = float(np.frombuffer(
-                    va[i], dtype="<f4", count=n, offset=4 + 4 * n).sum())
-                # ~key str + float + dict slot overhead per entry
-                self.spans_used += 2 * len(k) + 120
-            span[i] = s
-            ok[i] = s >= self.min_ms
-        for i in np.flatnonzero(alive & ~eq):
-            key = (vka[i], vkb[i])
-            r = self.res.get(key)
-            if r is None:
-                if self.res_used > _MEMO_MAX_BYTES:
-                    self.res.clear()
-                    self.res_used = 0
-                ev_a, ms_a, zc_a, pref_a = self.get(vka[i], va[i])
-                ev_b, _, zc_b, pref_b = self.get(vkb[i], vb[i])
-                r = self.res[key] = self._verify_audio_pair(
-                    ev_a, ms_a, zc_a, ev_b, zc_b, self.cfg,
-                    pref_a=pref_a, pref_b=pref_b)
-                # ~two key strs + tuple(bool, float) + dict slot overhead
-                self.res_used += 2 * (len(key[0]) + len(key[1])) + 200
-            ok[i], span[i] = r
-
-
-class _TextBoundedMemo(dict):
-    # accounted per entry: raw key + normalized copy (str overhead
-    # + up to 4 B/char) + lazily-materialized int32 codes array
-    # (4 B/char) + uint64 prefix-hash array (8 B/char) — all
-    # charged in __setitem__ up front so the in-place list
-    # mutations in _memo_codes/_memo_pref cannot bypass the
-    # budget ≈ conservatively 20 bytes/char
-    used = 0
 
     def __setitem__(self, k, v):
         if self.used > _MEMO_MAX_BYTES:
             self.clear()
             self.used = 0
-        self.used += 20 * len(k) + 160
+        self.used += self.charge(k, v)
         super().__setitem__(k, v)
 
 
-class _TextPairState:
-    """Per-partition text verification state for the fused kernel:
-    equal-content fast path via one memoized normalize per distinct
-    content, per-pair suffix kernel for unequal contents, plus an oriented
-    (tk_a, tk_b) -> nchars result memo for repeated content pairs."""
+def _per_content_pair(kernel):
+    """Runner that calls `kernel(ka, kb, xa, xb)` once per distinct
+    oriented content-key pair of a partition: the channel kernels are pure
+    functions of the contents, so an n-member duplicate group costs one
+    kernel call per content pair, not one per row. Returns the results
+    of rows `idx`, in order."""
+    # ~two key strs + result + dict slot overhead per entry
+    res = _Memo(lambda k, v: 2 * (len(k[0]) + len(k[1])) + 200)
 
-    def __init__(self):
-        from ..kernels.clipfeat import _text_memo, verify_text_pair
-        self._text_memo = _text_memo
-        self._verify_text_pair = verify_text_pair
-        self.memo = _TextBoundedMemo()
-        self.res: dict = {}
-        self.res_used = 0
-
-    def run(self, tka, tkb, ta, tb, idx, nch):
-        import numpy as np
-        m = len(tka)
-        sel = np.zeros(m, dtype=bool)
-        sel[idx] = True
-        eq = sel & (tka == tkb)
-        for i in np.flatnonzero(eq):
-            nch[i] = len(self._text_memo(str(ta[i]), self.memo)[0])
-        for i in np.flatnonzero(sel & ~eq):
-            key = (tka[i], tkb[i])
-            r = self.res.get(key)
+    def run(ka, kb, xa, xb, idx) -> list:
+        out = []
+        for i in idx:
+            key = (ka[i], kb[i])
+            r = res.get(key)
             if r is None:
-                if self.res_used > _MEMO_MAX_BYTES:
-                    self.res.clear()
-                    self.res_used = 0
-                r = self.res[key] = self._verify_text_pair(
-                    str(ta[i]), str(tb[i]), self.memo)
-                # ~two key strs + int + dict slot overhead per entry
-                self.res_used += 2 * (len(key[0]) + len(key[1])) + 200
-            nch[i] = r
+                r = res[key] = kernel(key[0], key[1], xa[i], xb[i])
+            out.append(r)
+        return out
+    return run
+
+
+def _audio_kernel(cfg: PipelineConfig):
+    """(vk_a, vk_b, vpack_a, vpack_b) -> (audio_ok, span_ms), with each
+    stream's unpack and LCS prefix hashes memoized by its content key."""
+    from ..kernels.clipfeat import unpack_events, verify_audio_pair
+    from ..kernels.suffix import lcs_prefix
+    # frombuffer views pin the packed source (4 + 12 B/event), plus the
+    # 8 B/event prefix array
+    unp = _Memo(lambda k, v: 4 + 12 * len(v[0]) + 8 * len(v[3]) + 64)
+
+    def unpacked(k, buf):
+        r = unp.get(k)
+        if r is None:
+            ev, ms, zc = unpack_events(buf)
+            r = unp[k] = (ev, ms, zc, lcs_prefix(ev))
+        return r
+
+    def kernel(ka, kb, va, vb):
+        ev_a, ms_a, zc_a, pref_a = unpacked(ka, va)
+        ev_b, _, zc_b, pref_b = unpacked(kb, vb)
+        return verify_audio_pair(ev_a, ms_a, zc_a, ev_b, zc_b, cfg,
+                                 pref_a=pref_a, pref_b=pref_b)
+    return kernel
+
+
+def _text_kernel():
+    """(tk_a, tk_b, transcript_a, transcript_b) -> span_chars, with each
+    transcript's normalize/codes/prefix hashes memoized by its raw text."""
+    from ..kernels.clipfeat import verify_text_pair
+    # raw key + normalized copy (str overhead + up to 4 B/char) + the
+    # lazily-filled int32 codes (4 B/char) and uint64 prefix hashes
+    # (8 B/char) ≈ conservatively 20 bytes/char
+    memo = _Memo(lambda k, v: 20 * len(k) + 160)
+    return lambda ka, kb, ta, tb: verify_text_pair(str(ta), str(tb), memo)
 
 
 def _fused_kernel(cfg: PipelineConfig):
     """Per-pair fused verification: simhash corroboration gates + both
     channel kernels in ONE mapInPandas stage. Gate arithmetic is the
-    NumPy hamming64 kernel the single-node oracle uses. Channel work is
-    memoized per oriented content pair via the pair-state classes, so an
-    n-member duplicate group still costs O(distinct content pairs) kernel
-    calls per partition, not O(rows)."""
+    NumPy hamming64 kernel the single-node oracle uses. Channel work runs
+    once per oriented content pair (_per_content_pair)."""
     gate = cfg.simhash_gate_bits
     min_chars = cfg.verify_min_chars
 
@@ -226,8 +147,8 @@ def _fused_kernel(cfg: PipelineConfig):
         import numpy as np
 
         from ..kernels.sketch import hamming64
-        A = _AudioPairState(cfg)
-        X = _TextPairState()
+        audio = _per_content_pair(_audio_kernel(cfg))
+        text = _per_content_pair(_text_kernel())
         for pdf in batches:
             m = len(pdf)
             if m == 0:
@@ -245,14 +166,14 @@ def _fused_kernel(cfg: PipelineConfig):
             nch = np.zeros(m, dtype=np.int64)
             ia = np.flatnonzero(try_audio)
             if ia.size:
-                A.run(pdf["vk_a"].to_numpy(), pdf["vk_b"].to_numpy(),
-                      pdf["vpack_a"].to_numpy(), pdf["vpack_b"].to_numpy(),
-                      ia, ok, span)
+                ok[ia], span[ia] = zip(*audio(
+                    pdf["vk_a"].to_numpy(), pdf["vk_b"].to_numpy(),
+                    pdf["vpack_a"].to_numpy(), pdf["vpack_b"].to_numpy(),
+                    ia))
             it = np.flatnonzero(try_text)
-            if it.size:
-                X.run(pdf["tk_a"].to_numpy(), pdf["tk_b"].to_numpy(),
-                      pdf["transcript_a"].to_numpy(),
-                      pdf["transcript_b"].to_numpy(), it, nch)
+            nch[it] = text(pdf["tk_a"].to_numpy(), pdf["tk_b"].to_numpy(),
+                           pdf["transcript_a"].to_numpy(),
+                           pdf["transcript_b"].to_numpy(), it)
             yield pd.DataFrame({
                 "a": pdf["a"], "b": pdf["b"],
                 "audio_ok": try_audio & ok,

@@ -16,6 +16,7 @@ from cdstore_spark.config import DEFAULT as CFG
 from cdstore_spark.engine import cluster as S_clust
 from cdstore_spark.engine import featurize as S_feat
 from cdstore_spark.engine import pipeline as P
+from cdstore_spark.engine import verify as S_verify
 from cdstore_spark.kernels import unionfind
 
 
@@ -151,6 +152,101 @@ class TestVerifyShuffleFallback:
         assert persisted() - before == set()
         feats.unpersist()
         cand.unpersist()
+
+
+class TestVerifyKernel:
+    """The fused verify kernel without Spark: every row must equal the
+    SimHash gates plus the oracle's per-pair clipfeat.verify_pair, with
+    the memos kept (default budget) or cleared on every insert (0)."""
+
+    @pytest.fixture(scope="class")
+    def batch(self, smoke_golden):
+        import hashlib
+
+        from cdstore_spark.kernels import clipfeat as K_clip
+        cand = pd.read_parquet(os.path.join(
+            smoke_golden, "expected_candidates.parquet")).head(24)
+        clips = pd.read_parquet(os.path.join(smoke_golden,
+                                             "audio_clips.parquet"))
+        clips = clips[clips["clip_id"].isin(set(cand["a"]) | set(cand["b"]))]
+        f = K_clip.featurize_batch(clips, CFG)
+        f["transcript"] = clips["transcript"].to_numpy()
+        # an equal-content copy of one clip, and its stream cut below
+        # verify_min_events
+        src = f.iloc[0]
+        dup, short = src.copy(), src.copy()
+        dup["clip_id"], short["clip_id"] = "dup", "short"
+        for c in ("events", "event_ms", "event_zcr"):
+            short[c] = short[c][:CFG.verify_min_events - 1]
+        f = pd.concat([f, pd.DataFrame([dup, short])], ignore_index=True)
+        f["vpack"] = [K_clip.pack_events(e, m, z) for e, m, z in
+                      zip(f["events"], f["event_ms"], f["event_zcr"])]
+        f["vk"] = [hashlib.md5(b).hexdigest() for b in f["vpack"]]
+        f["tk"] = [hashlib.md5(t.encode()).hexdigest()
+                   for t in f["transcript"]]
+        x = src["clip_id"]
+        # (dup, short) repeats the content pair of (x, short)
+        rows = pd.concat([cand, pd.DataFrame({
+            "a": [x, x, "dup", cand["b"][0]],
+            "b": ["dup", "short", "short", cand["a"][0]],
+            "from_audio": True, "from_text": True})], ignore_index=True)
+        for s in "ab":
+            side = f[["clip_id", *S_verify._SIDE_COLS]].rename(columns={
+                "clip_id": s, **{c: f"{n}_{s}"
+                                 for c, n in S_verify._SIDE_COLS.items()}})
+            rows = rows.merge(side, on=s, how="left")
+        return rows, f.set_index("clip_id")
+
+    def _expected(self, rows, f):
+        from cdstore_spark.kernels import clipfeat as K_clip
+        from cdstore_spark.kernels.sketch import hamming64
+
+        def ham(c):
+            return hamming64(
+                *(rows[f"{c}_{s}"].to_numpy().astype(np.int64)
+                  .view(np.uint64) for s in "ab"))
+        try_a = rows["from_audio"].to_numpy() | (ham("sha")
+                                                 <= CFG.simhash_gate_bits)
+        try_t = rows["from_text"].to_numpy() | (ham("sht")
+                                                <= CFG.simhash_gate_bits)
+        out = []
+        for a, b, ta, tt in zip(rows["a"], rows["b"], try_a, try_t):
+            A, B = f.loc[a], f.loc[b]
+            out.append((a, b) + K_clip.verify_pair(
+                A["events"], A["event_ms"], A["event_zcr"],
+                B["events"], B["event_zcr"], A["transcript"],
+                B["transcript"], CFG, bool(ta), bool(tt)))
+        exp = pd.DataFrame(out, columns=["a", "b", "audio_ok", "text_ok",
+                                         "span_ms", "span_chars"])
+        return exp.astype({"span_chars": np.int32}), try_a, try_t
+
+    @pytest.mark.parametrize("budget", [None, 0])
+    def test_rows_equal_per_pair_verify(self, batch, budget, monkeypatch):
+        rows, f = batch
+        exp, try_a, try_t = self._expected(rows, f)
+        # the batch holds the cases the kernels answer by early return
+        n_ev = rows["vpack_b"].map(lambda b: int.from_bytes(b[:4], "little"))
+        assert (try_a & (rows["vk_a"] == rows["vk_b"])).any()
+        assert (try_t & (rows["tk_a"] == rows["tk_b"])).any()
+        assert (try_a & (n_ev < CFG.verify_min_events)).any()
+        assert rows.duplicated(["vk_a", "vk_b", "tk_a", "tk_b"]).any()
+        assert (try_a & (rows["vk_a"] != rows["vk_b"])).any()
+        assert (try_t & (rows["tk_a"] != rows["tk_b"])).any()
+        assert exp["audio_ok"].any() and exp["text_ok"].any()
+        if budget is not None:
+            monkeypatch.setattr(S_verify, "_MEMO_MAX_BYTES", budget)
+        got = pd.concat(list(S_verify._fused_kernel(CFG)([rows])),
+                        ignore_index=True)
+        pd.testing.assert_frame_equal(got, exp)
+
+    def test_memo_clears_past_budget(self, monkeypatch):
+        monkeypatch.setattr(S_verify, "_MEMO_MAX_BYTES", 25)
+        m = S_verify._Memo(lambda k, v: 10)
+        for k in "abc":
+            m[k] = k
+        assert len(m) == 3 and m.used == 30
+        m["d"] = "d"
+        assert m == {"d": "d"} and m.used == 10
 
 
 class TestCacheHygiene:
@@ -293,3 +389,14 @@ class TestConnectedComponents:
         monkeypatch.setattr(S_clust, "_LOCAL_FINISH_MAX_EDGES", 4)
         got = S_clust.connected_components(pairs, uni).collect()
         assert all(r["cluster_id"] == "p000" for r in got)
+
+    def test_unconverged_raises(self, spark, monkeypatch):
+        # star rounds pinned open (gate=0): one round cannot contract a
+        # 64-node path, and its partial labels would split the component
+        ids = [f"q{i:03d}" for i in range(64)]
+        edges = list(zip(ids[:-1], ids[1:]))
+        pairs = spark.createDataFrame(edges, ["a", "b"])
+        uni = spark.createDataFrame([(i,) for i in ids], ["clip_id"])
+        monkeypatch.setattr(S_clust, "_LOCAL_FINISH_MAX_EDGES", 0)
+        with pytest.raises(RuntimeError, match="in 1 rounds"):
+            S_clust.connected_components(pairs, uni, max_iter=1)
