@@ -51,17 +51,6 @@ from pyspark.sql import functions as F
 #: scale-independent gate fits every heap.
 _LOCAL_FINISH_MAX_EDGES = 1 << 20
 
-#: when the CURRENT edge set is within this factor of the local-finish
-#: gate, the round materializes its large_star half separately and checks
-#: the gate on it — dedup graphs are near-clique-heavy, so large_star
-#: alone usually contracts below the gate and the small_star half of the
-#: last distributed round (3 of its ~6 shuffle stages) is skipped
-#: entirely. Outside this regime rounds keep the measured-faster single
-#: checkpoint per composed round (see the loop comment), so the at-scale
-#: path is unchanged.
-_HALF_ROUND_PROBE_FACTOR = 16
-
-
 def _sym(edges: DataFrame) -> DataFrame:
     return (edges.select(F.col("u"), F.col("v"))
             .unionByName(edges.select(F.col("v").alias("u"),
@@ -179,25 +168,7 @@ def connected_components(pairs: DataFrame, universe: DataFrame,
         # doCanonicalize by round ~8). Eager, not lazy: lazy checkpoints
         # of metric-bearing plans trigger the accumulator-GC race
         # (CLAUDE.md).
-        #
-        # EXCEPT near the gate: large_star alone preserves connectivity
-        # and keeps every non-singleton node in the edge set (each node
-        # either points a larger neighbor at its neighborhood min, is
-        # pointed at one, or IS a neighborhood min and appears as the
-        # target), so union-find over its output is already exact — and
-        # on near-clique dedup graphs it contracts most of the way on its
-        # own. Within PROBE_FACTOR of the gate the round checkpoints the
-        # half separately: if it landed under the gate, the small_star
-        # half never runs; if not, the only cost is one extra (cheap,
-        # sub-4M-edge) checkpoint for that round.
-        if prev_sig[0] <= _LOCAL_FINISH_MAX_EDGES * _HALF_ROUND_PROBE_FACTOR:
-            half = _large_star(prev).localCheckpoint(eager=True)
-            if half.count() <= _LOCAL_FINISH_MAX_EDGES:
-                labels = _local_finish(half)
-                break
-            cur = _small_star(half).localCheckpoint(eager=True)
-        else:
-            cur = _small_star(_large_star(prev)).localCheckpoint(eager=True)
+        cur = _small_star(_large_star(prev)).localCheckpoint(eager=True)
         sig = _sig(cur)             # cheap second job: scans the checkpoint
         prev = cur
         if sig == prev_sig:

@@ -108,17 +108,11 @@ def run_pipeline(spark: SparkSession, clips_path: str, workdir: str,
 
 
 def run_pipeline_inline(spark: SparkSession, clips: DataFrame,
-                        cfg: PipelineConfig = DEFAULT,
-                        clips_path: str | None = None) -> dict:
-    """Unchunked single-pass plan (no snapshot I/O) — used by the driver's
-    queries() where outputs are compared against oracles, and by bench.
-    Pass clips_path to use the payload-local parquet reader (fast path)."""
+                        cfg: PipelineConfig = DEFAULT) -> dict:
+    """Unchunked single-pass plan (no snapshot I/O) over a clip table."""
     # featurize is the expensive Arrow stage and feeds both the candidate
     # join and verify — persist so the plan computes it once
-    if clips_path is not None:
-        feats = S_feat.featurize_from_parquet(spark, clips_path, cfg).persist()
-    else:
-        feats = S_feat.featurize(clips, cfg).persist()
+    feats = S_feat.featurize(clips, cfg).persist()
     cand, skew = S_cand.candidate_pairs(feats, cfg)
     confirmed = S_verify.verify_candidates(cand, feats, cfg)
     clusters = S_clust.connected_components(

@@ -23,11 +23,10 @@ def _default_heap() -> str:
 
 
 def get_spark(app: str = "cdstore-spark", parallelism: int | None = None,
-              shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     cores = parallelism or int(os.environ.get(
         "SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
-    shuffle = shuffle_partitions or max(2 * cores, 32)
+    shuffle = max(2 * cores, 32)
     b = (
         SparkSession.builder
         .appName(app)

@@ -9,12 +9,20 @@ incremental_dedup_ingest:
 
     The band index is its own compact parquet table — (channel, band_idx,
     band_hash, clip_id) rows, partitioned by (epoch, bp) where bp is a
-    band-hash prefix bucket — so a micro-batch's lookup reads ONLY the
-    index partitions whose prefixes its own bands probe, never the
-    accumulated feature rows (whose multi-KB event/transcript payloads
-    would make per-batch matching O(total history bytes)). Per-batch match
-    cost is therefore O(colliding index buckets), independent of the size
-    of the feature store.
+    band-hash prefix bucket — so a micro-batch's lookup reads the narrow
+    index rows, never the accumulated feature rows (whose multi-KB
+    event/transcript payloads would make per-batch matching O(total
+    history bytes)). A micro-batch reads every bp bucket: any batch of
+    >= 4 clips already touches all of them, so probing for the touched
+    prefixes would prune nothing.
+
+    Each epoch's pairs come from ONE call to the batch engine's
+    capped_bucket_pairs over the batch's band rows plus the prior-epoch
+    index rows of the buckets the batch touches, keeping the pairs with a
+    member from this epoch. In a bucket of at most bucket_cap accumulated
+    members that is every new-new and new-old pair; above the cap the
+    bucket stays bounded across epochs as in batch, and with arrivals in
+    clip_id order the pair set equals batch candidate_pairs exactly.
 
     Exactly-once by Structured Streaming checkpointing + IDEMPOTENT
     epoch-partitioned writes: every output is partitioned by epoch and
@@ -39,6 +47,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT, PipelineConfig
 from ..engine import candidates as S_cand
 from ..engine import featurize as S_feat
+from ..engine.bucket_pairs import capped_bucket_pairs
 
 #: band-hash prefix buckets of the persisted index — the partition grain a
 #: lookup prunes on. 16 keeps directory counts sane at sandbox scale; on a
@@ -260,7 +269,7 @@ def incremental_dedup_ingest(spark: SparkSession, input_dir: str,
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # cache_scope releases scoped_persist()s made by the batch engine
-        # (the candidate join's bucket aggregate) once this batch's writes
+        # (capped_bucket_pairs' bucket aggregate) once this batch's writes
         # land — a long-running stream must not accumulate one cached
         # aggregation per micro-batch
         from ..engine.scope import cache_scope
@@ -273,56 +282,36 @@ def incremental_dedup_ingest(spark: SparkSession, input_dir: str,
         try:
             spark_l = batch_df.sparkSession
             new_bands = _with_bp(S_cand.explode_bands(batch_df, cfg)).persist()
-            # the prefix buckets this batch probes — a tiny collect
-            # (<= BAND_INDEX_BUCKETS values) that drives partition pruning
-            bps = [r["bp"] for r in
-                   new_bands.select("bp").distinct().collect()]
-            cross = None
-            if bps:
-                # match ONLY strictly-earlier epochs: a REPLAYED epoch
-                # must see exactly the index state its original run
-                # saw, or its epoch partition's pair content would
-                # differ (and pairs already owned by later epochs
-                # would duplicate). Reads the compact band index, NOT
-                # the feature store — per-batch match cost is bounded
-                # by the colliding index buckets, independent of how
-                # many epochs of multi-KB feature payloads exist.
-                # No try/except: the lookup returns None structurally
-                # when no prior-epoch layer exists; a real read error
-                # must FAIL the batch (streaming retries it) rather
-                # than silently dropping cross-epoch matches.
-                old_bands = band_index_lookup(spark_l, band_dir,
-                                              int(epoch_id), bps)
-                if old_bands is not None:
-                    # no take(1) emptiness probe (round 6): the lookup is
-                    # None STRUCTURALLY when no prior-epoch layer exists;
-                    # when layers exist but hold no colliding rows the
-                    # join below is simply empty — the probe was one extra
-                    # driver-blocking job per epoch that read the same
-                    # partitions the join reads anyway.
-                    key = ["channel", "band_idx", "band_hash"]
-                    # new-vs-old: inner join on band key (index lookup);
-                    # new-vs-new: within-batch pairs via the batch engine
-                    cross = (new_bands.alias("n")
-                             .join(old_bands.alias("o"), on=key, how="inner")
-                             .select(F.least("n.clip_id", "o.clip_id")
-                                     .alias("a"),
-                                     F.greatest("n.clip_id", "o.clip_id")
-                                     .alias("b"))
-                             .where(F.col("a") != F.col("b"))
-                             # dedup CROSS alone: a pair can recur across
-                             # colliding bands, but never overlap `within`
-                             # (each clip belongs to exactly one epoch, so
-                             # a cross pair always spans epochs) — and
-                             # `within` is already distinct (the candidate
-                             # enumerator groupBys on the pair). Round 6:
-                             # the union-wide distinct re-shuffled the
-                             # within pairs for nothing.
-                             .distinct())
-            within, _ = S_cand.candidate_pairs(batch_df, cfg)
-            pairs = within.select("a", "b")
-            if cross is not None:
-                pairs = pairs.unionByName(cross)
+            # ONE enumerator for the whole epoch (module docstring): this
+            # batch's band rows plus the prior-epoch index rows of the
+            # buckets it touches. The lookup reads every prefix bucket —
+            # any batch of >= 4 clips touches all of them — and only
+            # strictly-earlier epochs, so a REPLAYED epoch sees the index
+            # state its original run saw and regenerates its own pairs.
+            # No try/except: the lookup is None structurally when no
+            # prior-epoch layer exists; a real read error must FAIL the
+            # batch (streaming retries it).
+            key = ["channel", "band_idx", "band_hash"]
+            e = int(epoch_id)
+            bands = new_bands.withColumn("epoch", F.lit(e))
+            old = band_index_lookup(spark_l, band_dir, e,
+                                    list(range(BAND_INDEX_BUCKETS)))
+            if old is not None:
+                bands = bands.unionByName(
+                    old.join(new_bands.select(*key), key, "left_semi"))
+            # members are (clip_id, epoch) structs: clip_id leads, so
+            # they sort exactly as in batch; the epoch keeps the pairs
+            # with a member from THIS epoch (older pairs belong to the
+            # epoch that brought their later member)
+            raw = capped_bucket_pairs(
+                bands.select(*key, F.struct("clip_id", "epoch").alias("m")),
+                key, "m", cap=cfg.bucket_cap, soft=cfg.bucket_soft,
+                dedup_key=["channel"])
+            pairs = (raw.where((F.col("a.epoch") == e)
+                               | (F.col("b.epoch") == e))
+                     .select(F.col("a.clip_id").alias("a"),
+                             F.col("b.clip_id").alias("b"))
+                     .distinct())
 
             # The three epoch writes are independent of each other (pair
             # discovery, band index, feature store — disjoint directories,

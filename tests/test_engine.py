@@ -362,9 +362,10 @@ class TestConnectedComponents:
         assert loc == exp
 
     def test_half_round_exit_on_cliques(self, spark, monkeypatch):
-        # near-clique graphs contract below the gate after large_star
-        # ALONE: gate 64 < the 570 seed edges, but the large_star half
-        # (~19 edges per 20-clique) fires the early exit before small_star
+        # a gate crossed mid-loop on cliques: the 570 seed edges are above
+        # gate 64, one star round contracts each 20-clique to a 19-edge
+        # star, and the next round's gate check hands them to the local
+        # finish
         ids = [f"k{i:03d}" for i in range(60)]
         edges = [(ids[g * 20 + i], ids[g * 20 + j])
                  for g in range(3)
@@ -379,9 +380,9 @@ class TestConnectedComponents:
         assert got == exp
 
     def test_half_round_probe_without_exit(self, spark, monkeypatch):
-        # a path graph contracts slowly: the half probe runs (63 edges is
-        # within 16x of gate 4) but does NOT land under the gate, so the
-        # loop must continue through small_star rounds to convergence
+        # a gate crossed mid-loop on a path: a path contracts slowly, so
+        # the 63 edges take several star rounds before they fall under
+        # gate 4 and the local finish labels the rest
         ids = [f"p{i:03d}" for i in range(64)]
         edges = list(zip(ids[:-1], ids[1:]))
         pairs = spark.createDataFrame(edges, ["a", "b"])

@@ -14,22 +14,59 @@ from pyspark.sql import functions as F
 from cdstore_spark import golden
 
 
+def _stage(src: pd.DataFrame, in_dir, n_files: int) -> str:
+    """Write src as n_files arrival files with increasing mtimes, so the
+    file source (which orders by mtime) streams them in row order; at
+    maxFilesPerTrigger=4, 8 files make 2 epochs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdstore_spark.golden import _CLIPS_SCHEMA
+    in_dir.mkdir()
+    step = -(-len(src) // n_files)
+    for i in range(n_files):
+        path = str(in_dir / f"arrival_{i:02d}.parquet")
+        pq.write_table(pa.Table.from_pandas(src.iloc[i * step:(i + 1) * step],
+                                            schema=_CLIPS_SCHEMA,
+                                            preserve_index=False), path)
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))
+    return str(in_dir)
+
+
+def _batch_pairs(spark, src: pd.DataFrame, cfg) -> set:
+    """Batch candidate_pairs over all of src at once."""
+    from cdstore_spark.engine import candidates as S_cand
+    from cdstore_spark.engine import featurize as S_feat
+    from cdstore_spark.engine.scope import cache_scope
+    feats = S_feat.featurize(spark.createDataFrame(src), cfg)
+    with cache_scope():
+        exp, _ = S_cand.candidate_pairs(feats, cfg)
+        return set(map(tuple, exp.select("a", "b").toPandas().values))
+
+
+def _assert_stream_equals_batch(spark, clips: pd.DataFrame, tmp_path,
+                                cfg) -> None:
+    """Stream clips as 8 arrival files (2 epochs): the features span >= 2
+    epochs, and the stream's pair rows are unique and equal batch
+    candidate_pairs over the same clips."""
+    from cdstore_spark.streaming.ingest import incremental_dedup_ingest
+    in_dir = _stage(clips, tmp_path / "incoming8", 8)
+    state = str(tmp_path / "state8")
+    q = incremental_dedup_ingest(spark, in_dir, state, cfg)
+    q.awaitTermination(300)
+    assert (spark.read.parquet(os.path.join(state, "features"))
+            .select("epoch").distinct().count()) >= 2
+    rows = list(map(tuple, spark.read.parquet(os.path.join(state, "pairs"))
+                    .select("a", "b").toPandas().values))
+    assert len(rows) == len(set(rows))
+    assert set(rows) == _batch_pairs(spark, clips, cfg)
+
+
 @pytest.fixture()
 def staged_clips(spark, smoke_golden, tmp_path):
     """Split 120 smoke clips into 3 arrival files."""
     src = spark.read.parquet(golden.clips_path("smoke")).limit(120).toPandas()
-    in_dir = tmp_path / "incoming"
-    in_dir.mkdir()
-    for i in range(3):
-        part = src.iloc[i * 40:(i + 1) * 40]
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from cdstore_spark.golden import _CLIPS_SCHEMA
-        pq.write_table(
-            pa.Table.from_pandas(part, schema=_CLIPS_SCHEMA,
-                                 preserve_index=False),
-            str(in_dir / f"arrival_{i}.parquet"))
-    return str(in_dir), src
+    return _stage(src, tmp_path / "incoming", 3), src
 
 
 class TestIncrementalIngest:
@@ -108,19 +145,9 @@ class TestIncrementalIngest:
         from cdstore_spark.streaming.ingest import (
             BAND_INDEX_BUCKETS, band_index_lookup, incremental_dedup_ingest)
         _, src = staged_clips
-        # stage 8 arrival files so maxFilesPerTrigger=4 yields >= 2 epochs
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from cdstore_spark.golden import _CLIPS_SCHEMA
-        in_dir = tmp_path / "incoming8"
-        in_dir.mkdir()
-        for i in range(8):
-            part = src.iloc[i * 15:(i + 1) * 15]
-            pq.write_table(pa.Table.from_pandas(part, schema=_CLIPS_SCHEMA,
-                                                preserve_index=False),
-                           str(in_dir / f"arrival_{i}.parquet"))
+        in_dir = _stage(src, tmp_path / "incoming8", 8)
         state = str(tmp_path / "state4")
-        q = incremental_dedup_ingest(spark, str(in_dir), state)
+        q = incremental_dedup_ingest(spark, in_dir, state)
         q.awaitTermination(300)
         band_dir = os.path.join(state, "bands")
         feat_dir = os.path.join(state, "features")
@@ -171,20 +198,11 @@ class TestIncrementalIngest:
         from cdstore_spark.streaming import ingest as I
         _, src = staged_clips
         # 12 files x 10 clips at maxFilesPerTrigger=4 → 3 micro-batches
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from cdstore_spark.golden import _CLIPS_SCHEMA
-        in_dir = tmp_path / "incoming12"
-        in_dir.mkdir()
-        for i in range(12):
-            part = src.iloc[i * 10:(i + 1) * 10]
-            pq.write_table(pa.Table.from_pandas(part, schema=_CLIPS_SCHEMA,
-                                                preserve_index=False),
-                           str(in_dir / f"arrival_{i:02d}.parquet"))
+        in_dir = _stage(src, tmp_path / "incoming12", 12)
 
         # reference: same arrivals, no compaction
         state_ref = str(tmp_path / "state_ref")
-        q = I.incremental_dedup_ingest(spark, str(in_dir), state_ref)
+        q = I.incremental_dedup_ingest(spark, in_dir, state_ref)
         q.awaitTermination(300)
         ref_pairs = sorted(map(tuple, spark.read.parquet(
             os.path.join(state_ref, "pairs"))
@@ -197,7 +215,7 @@ class TestIncrementalIngest:
         # compacted run: fold committed epochs once 2 pile up
         monkeypatch.setattr(I, "BAND_COMPACT_EVERY", 2)
         state = str(tmp_path / "state_cmp")
-        q = I.incremental_dedup_ingest(spark, str(in_dir), state)
+        q = I.incremental_dedup_ingest(spark, in_dir, state)
         q.awaitTermination(300)
         band_dir = os.path.join(state, "bands")
 
@@ -230,7 +248,7 @@ class TestIncrementalIngest:
         # full checkpoint-wipe replay over the compacted state regenerates
         # the identical pair set (watermark < every replayable epoch)
         shutil.rmtree(os.path.join(state, "_checkpoint"))
-        q = I.incremental_dedup_ingest(spark, str(in_dir), state)
+        q = I.incremental_dedup_ingest(spark, in_dir, state)
         q.awaitTermination(300)
         replay_pairs = sorted(map(tuple, spark.read.parquet(
             os.path.join(state, "pairs"))
@@ -253,18 +271,9 @@ class TestIncrementalIngest:
         from cdstore_spark.streaming import ingest as I
         _, src = staged_clips
         # 12 files x 10 clips at maxFilesPerTrigger=4 → 3 micro-batches
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from cdstore_spark.golden import _CLIPS_SCHEMA
-        in_dir = tmp_path / "incoming_full"
-        in_dir.mkdir()
-        for i in range(12):
-            part = src.iloc[i * 10:(i + 1) * 10]
-            pq.write_table(pa.Table.from_pandas(part, schema=_CLIPS_SCHEMA,
-                                                preserve_index=False),
-                           str(in_dir / f"arrival_{i:02d}.parquet"))
+        in_dir = _stage(src, tmp_path / "incoming_full", 12)
         state = str(tmp_path / "state_full")
-        q = I.incremental_dedup_ingest(spark, str(in_dir), state)
+        q = I.incremental_dedup_ingest(spark, in_dir, state)
         q.awaitTermination(300)
         band_dir = os.path.join(state, "bands")
         epochs = I._epoch_partitions(band_dir)
@@ -298,29 +307,30 @@ class TestIncrementalIngest:
         assert I.band_index_lookup(spark, band_dir, 0, [0, 1]) is None
 
     def test_cross_batch_pairs_found(self, spark, staged_clips, tmp_path):
-        """Planted duplicates split across arrival files must still pair up
-        (new-vs-old band index join)."""
-        from cdstore_spark.streaming.ingest import incremental_dedup_ingest
-        in_dir, src = staged_clips
-        state = str(tmp_path / "state2")
-        q = incremental_dedup_ingest(spark, in_dir, state)
-        q.awaitTermination(300)
-
-        pair_dir = os.path.join(state, "pairs")
-        pairs = spark.read.parquet(pair_dir).toPandas()
-        got = set(map(tuple, pairs[["a", "b"]].values))
-
-        # batch reference: candidate pairs over the same 120 clips at once
-        import pyarrow.parquet as pq
-        from cdstore_spark.engine import candidates as S_cand
-        from cdstore_spark.engine import featurize as S_feat
+        """Planted duplicates split across epochs must still pair up: the
+        stream's pairs equal batch candidate_pairs over the same clips (no
+        bucket here is above bucket_cap, so it may add none extra)."""
         from cdstore_spark.config import DEFAULT
-        feats = S_feat.featurize(
-            spark.createDataFrame(src), DEFAULT)
-        exp_pairs, _ = S_cand.candidate_pairs(feats, DEFAULT)
-        exp = set(map(tuple, exp_pairs.select("a", "b").toPandas().values))
-        # streaming must find every batch candidate (it may add none extra)
-        assert exp <= got
+        _assert_stream_equals_batch(spark, staged_clips[1], tmp_path,
+                                    DEFAULT)
+
+    def test_hot_bucket_pairs_match_batch(self, spark, staged_clips,
+                                          tmp_path):
+        """A bucket above bucket_cap that spans epochs: 12 copies of one
+        clip interleaved with 120 others (bucket_cap=4, bucket_soft=2),
+        arriving in clip_id order. The stream enumerates each epoch with
+        the batch's capped enumerator, so its pairs equal batch
+        candidate_pairs; an uncapped cross-epoch join would add every
+        new x old pair of the hot bucket."""
+        from cdstore_spark.config import PipelineConfig
+        _, src = staged_clips
+        copies = pd.DataFrame([src.iloc[0]] * 12).assign(
+            clip_id=[f"{c}a" for c in src["clip_id"].iloc[::10]])
+        clips = (pd.concat([src, copies]).sort_values("clip_id")
+                 .reset_index(drop=True))
+        _assert_stream_equals_batch(spark, clips, tmp_path,
+                                    PipelineConfig(bucket_cap=4,
+                                                   bucket_soft=2))
 
 
 class TestStatefulOperator:

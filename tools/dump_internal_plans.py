@@ -31,7 +31,7 @@ def main() -> None:
     golden.ensure_golden(tier)
     clips_path = golden.clips_path(tier)
 
-    spark = get_spark("plan-dump-internal", parallelism=16)
+    spark = get_spark("plan-dump-internal")
     spark.sparkContext.setLogLevel("ERROR")
 
     feats = S_feat.featurize_from_parquet(spark, clips_path, DEFAULT)

@@ -23,7 +23,7 @@ def main() -> None:
     import __spark_entry__ as E
     from cdstore_spark.engine.session import get_spark
 
-    spark = get_spark("plan-dump", parallelism=16)
+    spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
     for name in names:
