@@ -86,9 +86,9 @@ def _spark(cpus: int):
 
 def _ensure_bench_clips(tier: str) -> str:
     from cdstore_spark import golden
-    d = golden.tier_dir(tier)
-    marker = os.path.join(d, "_CLIPS_DONE.json")
-    if not os.path.exists(marker):
+    from cdstore_spark.artifacts import reusable
+    marker = os.path.join(golden.tier_dir(tier), "_CLIPS_DONE.json")
+    if reusable(marker, golden.clips_ident(tier)) is None:
         s = _spark(CPUS)
         golden.ensure_clips_spark(tier, s)
         s.stop()

@@ -17,10 +17,11 @@ deterministically — same pattern as the audio golden tiers).
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
+
+from .artifacts import publish, reusable
 
 
 def ensure_hot_docs(n: int = 100_000, hot: int = 5_000,
@@ -40,13 +41,8 @@ def ensure_hot_docs(n: int = 100_000, hot: int = 5_000,
     marker = os.path.join(d, "_DOCS_DONE.json")
     ident = {"n": n, "hot": hot, "tpd": tokens_per_doc,
              "vocab": vocab, "seed": seed, "version": 1}
-    if os.path.exists(marker) and os.path.exists(path):
-        try:
-            with open(marker) as f:
-                if json.load(f) == ident:
-                    return path
-        except (json.JSONDecodeError, OSError):
-            pass
+    if reusable(marker, ident) and os.path.exists(path):
+        return path
     os.makedirs(d, exist_ok=True)
     rng = np.random.default_rng(seed)
     # the hot group's members are spread across the id space (not a
@@ -70,8 +66,5 @@ def ensure_hot_docs(n: int = 100_000, hot: int = 5_000,
         "n_chars": pa.array([len(t) for t in texts], pa.int64()),
     })
     pq.write_table(tbl, path, row_group_size=8192)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(ident, f)
-    os.replace(tmp, marker)
+    publish(marker, ident)
     return path

@@ -96,21 +96,18 @@ def featurize(clips: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            yield _engine_frame(featurize_batch(pdf, cfg,
-                                                with_pcm_stats=True), pdf)
+            yield _engine_frame(featurize_batch(pdf, cfg), pdf)
 
     return _with_content_keys(clips.mapInPandas(fn, _RAW_FEATURE_SCHEMA))
 
 
 def _engine_frame(out: pd.DataFrame, src: pd.DataFrame) -> pd.DataFrame:
-    """Kernel output → engine feature row: event arrays packed to vpack,
-    signatures dropped (bands carry everything downstream needs)."""
+    """Kernel output → engine feature row: event arrays packed to vpack."""
     from ..kernels.clipfeat import pack_events
     out["vpack"] = [
         pack_events(ev, ms, zc) for ev, ms, zc in
         zip(out["events"], out["event_ms"], out["event_zcr"])]
-    out = out.drop(columns=["sig_audio", "sig_text",
-                            "events", "event_ms", "event_zcr"])
+    out = out.drop(columns=["events", "event_ms", "event_zcr"])
     out["transcript"] = src["transcript"].astype(str).to_numpy()
     return out
 
@@ -173,8 +170,6 @@ def featurize_from_parquet(spark: SparkSession, path: str,
                 cpdf = tbl.to_pandas()
                 if len(cpdf) == 0:
                     continue
-                yield _engine_frame(featurize_batch(cpdf, cfg,
-                                                    with_pcm_stats=True),
-                                    cpdf)
+                yield _engine_frame(featurize_batch(cpdf, cfg), cpdf)
 
     return _with_content_keys(unit_df.mapInPandas(fn, _RAW_FEATURE_SCHEMA))

@@ -3,7 +3,7 @@ stage checkpointed through StageCheckpoint (per-partition lineage, resume).
 
 run_pipeline() is what `spark-submit --py-files cdstore_spark.zip` would
 invoke on a real cluster; entry()/queries() in __spark_entry__.py call it
-(or its unchunked fast path) for the driver's gates.
+for the driver's gates.
 """
 
 from __future__ import annotations
@@ -13,8 +13,7 @@ import hashlib
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from ..config import DEFAULT, PipelineConfig
 from . import candidates as S_cand
@@ -28,14 +27,30 @@ from .snapshot import StageCheckpoint, chunk_filter
 ENGINE_LAYOUT_VERSION = 6
 
 
+def _input_files(path: str) -> list[list]:
+    """(relative name, size, mtime_ns) of every file under a parquet file
+    or directory: a table rewritten in place changes it."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return [[os.path.basename(path), st.st_size, st.st_mtime_ns]]
+    out = []
+    for root, _, files in os.walk(path):
+        for name in files:
+            st = os.stat(os.path.join(root, name))
+            out.append([os.path.relpath(os.path.join(root, name), path),
+                        st.st_size, st.st_mtime_ns])
+    return sorted(out)
+
+
 def stage_fingerprint(cfg: PipelineConfig, n_chunks: int,
                       clips_path: str) -> str:
-    """Identity of a pipeline computation: config + chunking + input +
-    layout version. Stored in every snapshot manifest entry; a mismatch
-    forces recomputation instead of serving stale chunks."""
+    """Identity of a pipeline computation: config + chunking + input path
+    and files + layout version. Stored in every snapshot manifest entry; a
+    mismatch forces recomputation instead of serving stale chunks."""
     blob = json.dumps({
         "cfg": dataclasses.asdict(cfg), "n_chunks": n_chunks,
         "input": os.path.abspath(clips_path),
+        "files": _input_files(clips_path),
         "layout": ENGINE_LAYOUT_VERSION}, sort_keys=True)
     return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
@@ -105,18 +120,3 @@ def run_pipeline(spark: SparkSession, clips_path: str, workdir: str,
     return {"clips": clips, "feats": feats, "candidates": cand,
             "confirmed": confirmed, "clusters": clusters,
             "lineage": lineage, "skew_stats": skew_stats}
-
-
-def run_pipeline_inline(spark: SparkSession, clips: DataFrame,
-                        cfg: PipelineConfig = DEFAULT) -> dict:
-    """Unchunked single-pass plan (no snapshot I/O) over a clip table."""
-    # featurize is the expensive Arrow stage and feeds both the candidate
-    # join and verify — persist so the plan computes it once
-    feats = S_feat.featurize(clips, cfg).persist()
-    cand, skew = S_cand.candidate_pairs(feats, cfg)
-    confirmed = S_verify.verify_candidates(cand, feats, cfg)
-    clusters = S_clust.connected_components(
-        confirmed.select("a", "b"), clips.select("clip_id"),
-        edges_distinct=True)
-    return {"feats": feats, "candidates": cand, "confirmed": confirmed,
-            "clusters": clusters, "skew_stats": skew}

@@ -7,8 +7,9 @@ Graft of CDStore's container/recipe persistence + upload resumability
   * splits the stage into deterministic CHUNKS (hash ranges of the stage
     key), each written as its own parquet directory `<stage>/chunk=<i>/`,
   * records a per-chunk manifest entry (rows, value hash, per-partition row
-    counts, wall ms) via atomic tmp+rename JSON — the lineage/metrics table,
-  * on re-run, SKIPS every chunk whose manifest entry exists — a killed job
+    counts, wall ms) through artifacts.publish — the lineage/metrics table,
+  * on re-run, SKIPS every chunk whose manifest entry holds the stage
+    fingerprint (artifacts.reusable) — a killed job
     resumes mid-pipeline without recomputing completed partitions
     (BASELINE.json north_star), and the resumed output is byte-identical
     because chunk membership is a pure hash of the stage key.
@@ -21,7 +22,8 @@ Iceberg tables.
 
 from __future__ import annotations
 
-import json
+import functools
+import operator
 import os
 import time
 from collections.abc import Callable
@@ -29,12 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _atomic_write_json(path: str, obj: dict) -> None:
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
+from ..artifacts import publish, reusable
 
 
 class StageCheckpoint:
@@ -60,18 +57,9 @@ class StageCheckpoint:
     def _entry_path(self, chunk: int) -> str:
         return os.path.join(self.manifest_dir, f"chunk-{chunk:05d}.json")
 
-    def chunk_done(self, chunk: int) -> bool:
-        p = self._entry_path(chunk)
-        if not os.path.exists(p):
-            return False
-        try:
-            with open(p) as f:
-                return json.load(f).get("fingerprint", "") == self.fingerprint
-        except (json.JSONDecodeError, OSError):
-            return False
-
-    def completed_chunks(self) -> list[int]:
-        return sorted(c for c in range(self.n_chunks) if self.chunk_done(c))
+    def _entry(self, chunk: int) -> dict | None:
+        return reusable(self._entry_path(chunk),
+                        {"fingerprint": self.fingerprint})
 
     def _prune_orphan_chunks(self) -> None:
         """Remove chunk dirs/manifests with index >= n_chunks: a resume
@@ -113,7 +101,7 @@ class StageCheckpoint:
         from .scope import cache_scope
 
         self._prune_orphan_chunks()
-        todo = [i for i in range(self.n_chunks) if not self.chunk_done(i)]
+        todo = [i for i in range(self.n_chunks) if self._entry(i) is None]
 
         def _one(i: int) -> None:
             t0 = time.time()
@@ -127,21 +115,26 @@ class StageCheckpoint:
                       .withColumn("_part", F.spark_partition_id()))
                 df.write.mode("overwrite").parquet(out)
             written = spark.read.parquet(out)
-            per_part = [r.asDict() for r in
-                        (written.groupBy("_part")
-                         .agg(F.count(F.lit(1)).alias("rows"))
-                         .orderBy("_part").collect())]
             hcols = hash_cols_for_lineage or [
                 c for c in written.columns if c != "_part"]
-            agg = written.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.expr("bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in hcols)
-                       + "))").alias("value_hash")).collect()[0]
-            _atomic_write_json(self._entry_path(i), {
+            # one aggregation over the written chunk: per-partition rows
+            # and value-hash folds; the chunk's rows and hash are their
+            # sum and XOR
+            parts = sorted(
+                (r["_part"], r["rows"], r["h"]) for r in
+                written.groupBy("_part").agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.expr("bit_xor(xxhash64("
+                           + ", ".join(f"`{c}`" for c in hcols)
+                           + "))").alias("h")).collect())
+            value_hash = (functools.reduce(operator.xor, (h for *_, h in parts))
+                          if parts else None)
+            publish(self._entry_path(i), {
                 "stage": self.stage, "chunk": i,
                 "fingerprint": self.fingerprint,
-                "rows": agg["rows"], "value_hash": str(agg["value_hash"]),
-                "partitions": per_part,
+                "rows": sum(n for _, n, _ in parts),
+                "value_hash": str(value_hash),
+                "partitions": [{"_part": p, "rows": n} for p, n, _ in parts],
                 "wall_ms": int(1000 * (time.time() - t0)),
             })
 
@@ -161,11 +154,8 @@ class StageCheckpoint:
         return spark.read.parquet(self.dir).drop("_part", "chunk")
 
     def lineage(self) -> list[dict]:
-        out = []
-        for c in self.completed_chunks():
-            with open(self._entry_path(c)) as f:
-                out.append(json.load(f))
-        return out
+        entries = (self._entry(c) for c in range(self.n_chunks))
+        return [e for e in entries if e is not None]
 
 
 def chunk_filter(col: str, n_chunks: int, chunk: int):

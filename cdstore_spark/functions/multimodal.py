@@ -116,14 +116,6 @@ def resample_audio_stats(df: DataFrame, target_hz: int = 8000) -> DataFrame:
             .mapInPandas(fn, RESAMPLE_SCHEMA))
 
 
-IMAGE_META_SCHEMA = T.StructType([
-    T.StructField("clip_id", T.StringType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("feature", T.ArrayType(T.FloatType())),
-])
-
-
 def decode_image_stub(raw: bytes) -> tuple[int, int, np.ndarray]:
     """STUB — image codecs (PIL/libjpeg) are not available in this sandbox.
 
@@ -137,26 +129,6 @@ def decode_image_stub(raw: bytes) -> tuple[int, int, np.ndarray]:
     ht = 64 + h[1] % 192
     feat = (np.frombuffer(h, dtype=np.uint8).astype(np.float32) / 255.0)
     return w, ht, feat
-
-
-def image_features(df: DataFrame, id_col: str = "clip_id",
-                   bin_col: str = "bytes") -> DataFrame:
-    """Image decode + feature extraction plumbing over binary columns —
-    real mapInPandas pipeline around the stubbed decode kernel."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            recs = []
-            for cid, raw in zip(pdf[id_col].to_numpy(),
-                                pdf[bin_col].to_numpy()):
-                w, h, feat = decode_image_stub(bytes(raw))
-                recs.append((cid, w, h, feat.tolist()))
-            yield pd.DataFrame(recs, columns=["clip_id", "width", "height",
-                                              "feature"])
-
-    return df.select(id_col, bin_col).mapInPandas(fn, IMAGE_META_SCHEMA)
 
 
 IMAGE_SUMMARY_SCHEMA = T.StructType([
@@ -182,9 +154,10 @@ def image_summary_record(raw: bytes) -> tuple[int, int, str, float]:
 
 def image_feature_summary(df: DataFrame, id_col: str = "clip_id",
                           bin_col: str = "bytes") -> DataFrame:
-    """Scalar projection of image_features for contract/oracle comparison
-    (array columns are summarized: md5 of the float32 feature bytes + the
-    6-dp mean), so the result is pure scalar columns end to end."""
+    """Image decode + feature extraction over binary columns, projected to
+    scalars for contract/oracle comparison: the stubbed decoder's feature
+    vector is summarized as the md5 of its float32 bytes + its 6-dp mean,
+    so the result is pure scalar columns end to end."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

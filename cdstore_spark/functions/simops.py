@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..artifacts import publish, reusable
 from ..config import DEFAULT, PipelineConfig
 
 EMBED_DIM = 64  # driver testdata embeddings are fixed-width
@@ -269,7 +270,6 @@ def ensure_ivf_index(spark, df: DataFrame, index_dir: str, k: int = 16
     is what keeps a regenerated-in-place embeddings table from being
     silently served stale index lists (same guarantee stage_fingerprint
     gives the audio snapshots)."""
-    import json
     import shutil
     fp = df.agg(
         F.count(F.lit(1)).alias("n"),
@@ -277,19 +277,11 @@ def ensure_ivf_index(spark, df: DataFrame, index_dir: str, k: int = 16
     ident = {"k": k, "ann_version": ANN_INDEX_VERSION,
              "n_rows": int(fp["n"]), "content_h": int(fp["h"] or 0)}
     marker = os.path.join(index_dir, "_INDEX_DONE.json")
-    if os.path.exists(marker):
-        try:
-            with open(marker) as f:
-                if json.load(f) == ident:
-                    return index_dir
-        except (json.JSONDecodeError, OSError):
-            pass
-        shutil.rmtree(index_dir, ignore_errors=True)
+    if reusable(marker, ident):
+        return index_dir
+    shutil.rmtree(index_dir, ignore_errors=True)
     ann_index_build(spark, df, index_dir, k)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(ident, f)
-    os.replace(tmp, marker)
+    publish(marker, ident)
     return index_dir
 
 

@@ -64,16 +64,6 @@ def dedup_exact_canonical(df: DataFrame) -> DataFrame:
                      F.min("doc_id").over(w).alias("canonical_doc_id"))
 
 
-def dedup_exact(df: DataFrame) -> DataFrame:
-    """Exact duplicate groups by full-text md5 (CDStore's fingerprint-index
-    dedup op 10, degenerated to byte equality). Returns one row per
-    duplicated text: (text_md5, n_docs, canonical_doc_id)."""
-    return (df.groupBy(F.md5(F.col("text")).alias("text_md5"))
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.min("doc_id").alias("canonical_doc_id"))
-            .where(F.col("n_docs") > 1))
-
-
 def _pair_jaccard(cand: DataFrame, g: DataFrame,
                   threshold: float) -> DataFrame:
     """Exact Jaccard computed ONLY for the given candidate pairs.

@@ -17,7 +17,7 @@ correctness ~ sf0.01, bench ~ sf0.1.
 
 from __future__ import annotations
 
-import json
+import dataclasses
 import os
 
 import pandas as pd
@@ -25,6 +25,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from . import datagen, oracle
+from .artifacts import publish, reusable
 from .config import DEFAULT, PipelineConfig
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -74,6 +75,19 @@ def _write(pdf: pd.DataFrame, path: str, schema: pa.Schema | None = None) -> Non
     pq.write_table(tbl, path, row_group_size=512)
 
 
+def clips_ident(tier: str) -> dict:
+    """Identity of a tier's clip table: tier sizes plus the datagen seed.
+    Artifacts built from the table (goldens, function goldens, the stream
+    state) carry it in their own identity."""
+    n, p = TIERS[tier]
+    return {"tier": tier, "n_clips": n, "planted": p,
+            "seed": datagen.MASTER_SEED}
+
+
+def _clips_marker(tier: str) -> str:
+    return os.path.join(tier_dir(tier), "_CLIPS_DONE.json")
+
+
 def ensure_clips(tier: str) -> str:
     """Generate the audio_clips + planted_pairs parquet for a tier if absent.
 
@@ -81,20 +95,17 @@ def ensure_clips(tier: str) -> str:
     produced separately by ensure_golden because the bench tier only needs
     inputs, not a 100k-clip single-node oracle run.
     """
-    d = tier_dir(tier)
-    marker = os.path.join(d, "_CLIPS_DONE.json")
-    if os.path.exists(marker):
+    ident = clips_ident(tier)
+    if reusable(_clips_marker(tier), ident):
         return clips_path(tier)
+    d = tier_dir(tier)
     os.makedirs(d, exist_ok=True)
     n, p = TIERS[tier]
     spec = datagen.build_spec(n, p)
     clips = datagen.synth_batch(spec)
     _write(clips, clips_path(tier), _CLIPS_SCHEMA)
     _write(datagen.planted_pairs(spec), os.path.join(d, "planted_pairs.parquet"))
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"tier": tier, "n_clips": n, "planted": p, "seed": datagen.MASTER_SEED}, f)
-    os.replace(tmp, marker)
+    publish(_clips_marker(tier), ident)
     return clips_path(tier)
 
 
@@ -103,10 +114,10 @@ def ensure_clips_spark(tier: str, spark) -> str:
     ~5.6 GB): spec built on the driver (pure metadata), synthesis fanned out
     via mapInPandas, written as many-file parquet so the payload-local
     reader gets plenty of row-group work units."""
-    d = tier_dir(tier)
-    marker = os.path.join(d, "_CLIPS_DONE.json")
-    if os.path.exists(marker):
+    ident = clips_ident(tier)
+    if reusable(_clips_marker(tier), ident):
         return clips_path(tier)
+    d = tier_dir(tier)
     os.makedirs(d, exist_ok=True)
     n, p = TIERS[tier]
     spec = datagen.build_spec(n, p)
@@ -134,19 +145,18 @@ def ensure_clips_spark(tier: str, spark) -> str:
      .option("parquet.block.size", 16 * 1024 * 1024)
      .parquet(clips_path(tier)))
     _write(planted, os.path.join(d, "planted_pairs.parquet"))
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"tier": tier, "n_clips": n, "planted": p,
-                   "seed": datagen.MASTER_SEED, "writer": "spark"}, f)
-    os.replace(tmp, marker)
+    publish(_clips_marker(tier), dict(ident, writer="spark"))
     return clips_path(tier)
 
 
 def ensure_golden(tier: str, cfg: PipelineConfig = DEFAULT) -> str:
-    """Run the single-node oracle and freeze its outputs for a tier."""
+    """Run the single-node oracle and freeze its outputs for a tier. The
+    marker holds the clip table's identity and the config next to the
+    quality metrics, so a config change rebuilds the golden."""
     d = tier_dir(tier)
     marker = os.path.join(d, "_GOLDEN_DONE.json")
-    if os.path.exists(marker):
+    ident = {"clips": clips_ident(tier), "cfg": dataclasses.asdict(cfg)}
+    if reusable(marker, ident):
         return d
     ensure_clips(tier)
     clips = pq.read_table(clips_path(tier)).to_pandas()
@@ -161,10 +171,7 @@ def ensure_golden(tier: str, cfg: PipelineConfig = DEFAULT) -> str:
     planted = pq.read_table(os.path.join(d, "planted_pairs.parquet")).to_pandas()
     metrics = oracle.recall_vs_planted(res["confirmed"], planted, res["clusters"])
     metrics.update(confirmed=int(len(conf)), candidates=int(len(res["candidates"])))
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(metrics, f, indent=1)
-    os.replace(tmp, marker)
+    publish(marker, dict(metrics, **ident))
     return d
 
 

@@ -10,13 +10,14 @@ pandas — the contract row then proves distributed == single-node exactly,
 the same gate the audio pipeline uses.
 
 Artifacts live in data/func_correctness/ (gitignored, regenerated
-deterministically; marker _FUNC_GOLDEN_DONE.json carries a VERSION that is
-bumped whenever a mirrored operator's semantics change).
+deterministically; marker _FUNC_GOLDEN_DONE.json holds a VERSION that is
+bumped whenever a mirrored operator's semantics change, the config and the
+identity of the clip tier the mirrors read).
 """
 
 from __future__ import annotations
 
-import json
+import dataclasses
 import os
 
 import numpy as np
@@ -25,6 +26,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from . import golden, oracle
+from .artifacts import publish, reusable
 from .config import DEFAULT, PipelineConfig
 
 VERSION = 8
@@ -389,10 +391,11 @@ def _expected_ann_ivf(embs: pd.DataFrame, k_lists: int = 16,
 
 def ensure_func_golden(cfg: PipelineConfig = DEFAULT) -> str:
     marker = os.path.join(FUNC_DIR, "_FUNC_GOLDEN_DONE.json")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if json.load(f).get("version") == VERSION:
-                return FUNC_DIR
+    ident = {"version": VERSION, "sf_dir": SF_DIR,
+             "clips": golden.clips_ident("correctness"),
+             "cfg": dataclasses.asdict(cfg)}
+    if reusable(marker, ident):
+        return FUNC_DIR
     os.makedirs(FUNC_DIR, exist_ok=True)
     golden.ensure_clips("correctness")
     clips = pq.read_table(golden.clips_path("correctness")).to_pandas()
@@ -418,10 +421,7 @@ def ensure_func_golden(cfg: PipelineConfig = DEFAULT) -> str:
     _write(_expected_ann_ivf(embs), "expected_ann_ivf.parquet")
     _write(_expected_doc_clusters(os.path.join(SF_DIR, "documents.parquet")),
            "expected_doc_clusters.parquet")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"version": VERSION, "sf_dir": SF_DIR}, f)
-    os.replace(tmp, marker)
+    publish(marker, ident)
     return FUNC_DIR
 
 

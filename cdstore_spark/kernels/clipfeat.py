@@ -35,16 +35,14 @@ def _csr(arrays: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
     return values.astype(U64, copy=False), offsets
 
 
-def featurize_batch(pdf: pd.DataFrame, cfg: PipelineConfig,
-                    with_pcm_stats: bool = False) -> pd.DataFrame:
+def featurize_batch(pdf: pd.DataFrame, cfg: PipelineConfig) -> pd.DataFrame:
     """Input columns: clip_id, bytes, sr_hz, dur_ms, codec, transcript.
 
     Output columns (one row per clip):
         clip_id, n_events, events (list<uint16 as int32>), event_ms
-        (list<float>), sig_audio / sig_text (list<uint64 as int64>, len k),
-        simhash_audio / simhash_text (int64), bands_audio / bands_text
-        (list<int64>, len lsh_bands), n_shingles_audio, n_shingles_text
-        [+ n_samples, rms, pcm_sha256 when with_pcm_stats]
+        (list<float>), event_zcr (list<float>), n_shingles_audio,
+        n_shingles_text, simhash_audio / simhash_text (int64), bands_audio /
+        bands_text (list<int64>, len lsh_bands), n_samples, rms, pcm_sha256
     """
     n = len(pdf)
     ev_syms: list[np.ndarray] = []
@@ -67,10 +65,9 @@ def featurize_batch(pdf: pd.DataFrame, cfg: PipelineConfig,
         ev_zcr.append(zcrs)
         audio_sh.append(K_feat.audio_shingles(syms, cfg))
         text_sh.append(K_text.ngram_shingles(str(texts[i]), cfg.text_ngram, cfg.text_short_tokens))
-        if with_pcm_stats:
-            n_samples[i] = x.shape[0]
-            rms[i] = float(np.sqrt(np.mean(x.astype(np.float64) ** 2))) if x.shape[0] else 0.0
-            sha.append(hashlib.sha256(np.ascontiguousarray(x).tobytes()).hexdigest())
+        n_samples[i] = x.shape[0]
+        rms[i] = float(np.sqrt(np.mean(x.astype(np.float64) ** 2))) if x.shape[0] else 0.0
+        sha.append(hashlib.sha256(np.ascontiguousarray(x).tobytes()).hexdigest())
 
     a_vals, a_offs = _csr(audio_sh)
     t_vals, t_offs = _csr(text_sh)
@@ -81,7 +78,7 @@ def featurize_batch(pdf: pd.DataFrame, cfg: PipelineConfig,
     bands_a = K_sketch.band_hashes(sig_a, cfg)
     bands_t = K_sketch.band_hashes(sig_t, cfg)
 
-    out = pd.DataFrame({
+    return pd.DataFrame({
         "clip_id": pdf["clip_id"].astype(str).to_numpy(),
         "n_events": np.asarray([s.shape[0] for s in ev_syms], dtype=np.int32),
         "events": [s.astype(np.int32) for s in ev_syms],
@@ -89,18 +86,14 @@ def featurize_batch(pdf: pd.DataFrame, cfg: PipelineConfig,
         "event_zcr": [z.astype(np.float32) for z in ev_zcr],
         "n_shingles_audio": (a_offs[1:] - a_offs[:-1]).astype(np.int32),
         "n_shingles_text": (t_offs[1:] - t_offs[:-1]).astype(np.int32),
-        "sig_audio": [row.astype(np.int64) for row in sig_a.view(np.int64)],
-        "sig_text": [row.astype(np.int64) for row in sig_t.view(np.int64)],
         "simhash_audio": sim_a.view(np.int64),
         "simhash_text": sim_t.view(np.int64),
         "bands_audio": [row for row in bands_a.view(np.int64)],
         "bands_text": [row for row in bands_t.view(np.int64)],
+        "n_samples": n_samples,
+        "rms": rms,
+        "pcm_sha256": sha,
     })
-    if with_pcm_stats:
-        out["n_samples"] = n_samples
-        out["rms"] = rms
-        out["pcm_sha256"] = sha
-    return out
 
 
 def pack_events(ev: np.ndarray, ms: np.ndarray, zcr: np.ndarray) -> bytes:

@@ -12,8 +12,6 @@ similarity sketches, not cryptographic integrity.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 
 U64 = np.uint64
@@ -39,11 +37,6 @@ def mix64(z: np.ndarray) -> np.ndarray:
 def mix2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Combine two uint64 arrays into one hash."""
     return mix64(np.asarray(a, U64) ^ (mix64(b) + _MIX1))
-
-
-def stable_str_hash64(s: str) -> int:
-    """Deterministic 64-bit hash of a string (blake2b, cross-process stable)."""
-    return int.from_bytes(hashlib.blake2b(s.encode("utf-8"), digest_size=8).digest(), "little")
 
 
 def poly_prefix(x: np.ndarray) -> np.ndarray:

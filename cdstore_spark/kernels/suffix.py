@@ -1,16 +1,19 @@
-"""Suffix-array longest-common-substring verification (stage S7).
+"""Longest-common-run verification kernels (stage S7).
 
 The north rule's "suffix-array substring pass confirms exact duplicate
-spans": for each candidate pair we build a suffix array (prefix-doubling on
-np.argsort / np.lexsort) + Kasai LCP over the concatenation
-    tokens_a ++ [SEP] ++ tokens_b
-and take the max LCP between suffixes from different halves — the longest
-common token run. For the audio channel tokens are event symbols and the
-span is converted back to milliseconds via the events' true durations; for
-the transcript channel tokens are codepoints and the span is characters.
+spans". The hot path is `longest_common_run`: a binary search on the run
+length over O(1) shift-invariant polynomial span hashes (`lcs_prefix`
+computes a content's prefix hashes once; verify's fused kernel caches them
+per distinct content). It runs per candidate pair inside the verify
+stage's mapInPandas. For the audio channel tokens are event symbols and
+the run is converted back to milliseconds via the events' true durations;
+for the transcript channel tokens are codepoints and the run is characters.
 
-Token sequences are short (hundreds), so O(n log^2 n) NumPy is plenty and
-each verify batch stays vectorized inside applyInPandas.
+`longest_common_run_sa` is the textbook construction — suffix array by
+prefix doubling plus a hashed LCP array over
+    tokens_a ++ [SEP] ++ tokens_b
+taking the max LCP between suffixes from different halves — kept as the
+cross-check reference the tests compare the hot path against.
 """
 
 from __future__ import annotations
@@ -45,34 +48,6 @@ def suffix_array(tokens: np.ndarray) -> np.ndarray:
             break
         k <<= 1
     return order
-
-
-def lcp_array(tokens: np.ndarray, sa: np.ndarray) -> np.ndarray:
-    """Kasai LCP: lcp[i] = LCP(suffix sa[i-1], suffix sa[i]); lcp[0] = 0.
-
-    Reference implementation (O(n), but a per-token Python loop); the
-    pipeline uses lcp_array_hashed, which computes the same array with
-    vectorized NumPy. Kept for cross-checking in tests.
-    """
-    n = tokens.shape[0]
-    lcp = np.zeros(n, dtype=np.int64)
-    if n < 2:
-        return lcp
-    rank = np.empty(n, dtype=np.int64)
-    rank[sa] = np.arange(n)
-    h = 0
-    for i in range(n):
-        r = rank[i]
-        if r > 0:
-            j = sa[r - 1]
-            while i + h < n and j + h < n and tokens[i + h] == tokens[j + h]:
-                h += 1
-            lcp[r] = h
-            if h:
-                h -= 1
-        else:
-            h = 0
-    return lcp
 
 
 def lcp_array_hashed(tokens: np.ndarray, sa: np.ndarray) -> np.ndarray:

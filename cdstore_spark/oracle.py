@@ -131,7 +131,7 @@ def verify_pairs(feats: pd.DataFrame, cand: pd.DataFrame, clips: pd.DataFrame,
 def run_oracle(clips: pd.DataFrame, cfg: PipelineConfig = DEFAULT) -> dict:
     """Full single-node pipeline. Returns feats / candidates / confirmed /
     clusters (clip_id, cluster_id = min member)."""
-    feats = K_clip.featurize_batch(clips, cfg, with_pcm_stats=True)
+    feats = K_clip.featurize_batch(clips, cfg)
     cand = candidate_pairs_from_feats(feats, cfg)
     confirmed = verify_pairs(feats, cand, clips, cfg)
     comp = K_uf.components(

@@ -390,28 +390,26 @@ def ensure_incremental_run(spark: SparkSession, tier: str = "correctness",
     micro-batch epochs), and the accumulated state is frozen under
     data/stream_<tier>/ for the streaming contract query. Because
     featurize is deterministic per clip, the accumulated feature rows must
-    equal the batch engine's — which is what the oracle checks."""
-    import json
+    equal the batch engine's — which is what the oracle checks. The
+    marker holds the layouts, the config and the clip tier's identity; any
+    other marker rebuilds the state from scratch."""
+    import dataclasses
     import shutil
 
     import pyarrow.parquet as pq
 
     from .. import golden
-
+    from ..artifacts import publish, reusable
     from ..engine.pipeline import ENGINE_LAYOUT_VERSION
 
     state = os.path.join(golden.DATA_ROOT, f"stream_{tier}")
     marker = os.path.join(state, "_STREAM_DONE.json")
-    if os.path.exists(marker):
-        try:
-            with open(marker) as f:
-                m = json.load(f)
-                if (m.get("layout") == ENGINE_LAYOUT_VERSION
-                        and m.get("stream_layout") == STREAM_LAYOUT_VERSION):
-                    return state
-        except (json.JSONDecodeError, OSError):
-            pass
-        # stale layout (featurize schema or state layout changed) — rebuild
+    ident = {"n_files": n_files, "layout": ENGINE_LAYOUT_VERSION,
+             "stream_layout": STREAM_LAYOUT_VERSION,
+             "clips": golden.clips_ident(tier),
+             "cfg": dataclasses.asdict(cfg)}
+    if reusable(marker, ident):
+        return state
     shutil.rmtree(state, ignore_errors=True)
     input_dir = os.path.join(state, "input")
     os.makedirs(input_dir, exist_ok=True)
@@ -426,12 +424,7 @@ def ensure_incremental_run(spark: SparkSession, tier: str = "correctness",
                            row_group_size=512)
     query = incremental_dedup_ingest(spark, input_dir, state, cfg)
     query.awaitTermination()
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"tier": tier, "n_files": n_files,
-                   "layout": ENGINE_LAYOUT_VERSION,
-                   "stream_layout": STREAM_LAYOUT_VERSION}, f)
-    os.replace(tmp, marker)
+    publish(marker, ident)
     return state
 
 

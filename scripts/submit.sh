@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Package + launch the dedup pipeline the way the north rule specifies:
-# spark-submit --py-files on a multi-executor cluster. In this sandbox the
-# master defaults to local[32]; on a real cluster pass e.g.
+# spark-submit --py-files on a multi-executor cluster. Locally the master
+# defaults to local[<cores>], the cores taken from SPARK_GRAFT_CPUS or nproc
+# (as engine/session.get_spark sizes them); on a real cluster pass e.g.
 #   MASTER=yarn EXTRA="--num-executors 250 --executor-cores 4" ./scripts/submit.sh ...
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -9,7 +10,7 @@ cd "$(dirname "$0")/.."
 INPUT="${1:?usage: submit.sh <input parquet/iceberg> <workdir> [chunks]}"
 WORKDIR="${2:?usage: submit.sh <input parquet/iceberg> <workdir> [chunks]}"
 CHUNKS="${3:-16}"
-MASTER="${MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}"
+MASTER="${MASTER:-local[${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}]}"
 
 rm -f /tmp/cdstore_spark.zip
 zip -qr /tmp/cdstore_spark.zip cdstore_spark -x '*__pycache__*'

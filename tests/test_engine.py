@@ -21,10 +21,12 @@ from cdstore_spark.kernels import unionfind
 
 
 @pytest.fixture(scope="module")
-def smoke_run(spark, smoke_golden):
-    clips = S_feat.load_clips(spark, golden.clips_path("smoke"))
-    out = P.run_pipeline_inline(spark, clips)
-    res = {
+def smoke_run(spark, smoke_golden, tmp_path_factory):
+    """The checkpointed runner the contract and jobs/run_dedup.py use, over
+    a fresh workdir on the smoke tier."""
+    out = P.run_pipeline(spark, golden.clips_path("smoke"),
+                         str(tmp_path_factory.mktemp("smoke_run")))
+    return {
         "confirmed": out["confirmed"].toPandas(),
         "clusters": out["clusters"].toPandas(),
         "feats": out["feats"].select(
@@ -32,8 +34,6 @@ def smoke_run(spark, smoke_golden):
             "transcript").toPandas(),
         "skew": out["skew_stats"].toPandas(),
     }
-    out["feats"].unpersist()
-    return res
 
 
 class TestEngineMatchesOracle:

@@ -209,11 +209,12 @@ class TestMultimodal:
         from cdstore_spark.functions import multimodal as M
         clips = S_feat.load_clips(
             spark, golden.clips_path("smoke")).limit(10)
-        out = M.image_features(clips).toPandas()
+        out = M.image_feature_summary(clips).toPandas()
         assert len(out) == 10
-        assert all(len(f) == 16 for f in out["feature"])
+        raw = clips.select("bytes").first()["bytes"]
+        assert M.decode_image_stub(bytes(raw))[2].shape == (16,)
         # deterministic fake: same bytes → same feature
-        out2 = M.image_features(clips).toPandas()
+        out2 = M.image_feature_summary(clips).toPandas()
         pd.testing.assert_frame_equal(
             out.sort_values("clip_id").reset_index(drop=True),
             out2.sort_values("clip_id").reset_index(drop=True))
