@@ -114,20 +114,17 @@ def worker(cpus: int, what: str, path: str, out: str) -> None:
             best = min(best, time.time() - t1)
         res = {"wall_s": best, "rows": n}
     elif what == "e2e":
-        from cdstore_spark.engine.scope import cache_scope
         stages: dict[str, float] = {}
         t1 = time.time()
         feats = S_feat.featurize_from_parquet(spark, path, CFG).persist()
         n = feats.count()
         stages["featurize"] = round(time.time() - t1, 2)
         t1 = time.time()
-        with cache_scope():   # releases the bucket aggregate after cand
-            cand, _ = S_cand.candidate_pairs(feats, CFG)
-            cand = cand.persist()
-            n_cand = cand.count()
+        cand, _ = S_cand.candidate_pairs(feats, CFG)
+        cand = cand.persist()
+        n_cand = cand.count()
         stages["candidates"] = round(time.time() - t1, 2)
         t1 = time.time()
-        # verify persists nothing of its own: no cache scope needed
         conf = S_verify.verify_candidates(cand, feats, CFG,
                                           n_feats=n,
                                           n_cand=n_cand).persist()
@@ -218,14 +215,12 @@ def worker(cpus: int, what: str, path: str, out: str) -> None:
         # skew-bounded LSH band join → union-find clusters, over the
         # planted hot-group corpus (path = ensure_hot_docs output)
         from pyspark.sql import functions as F
-        from cdstore_spark.engine.scope import cache_scope
         from cdstore_spark.functions import textops as X
         stages = {}
         docs = spark.read.parquet(path)
         t1 = time.time()
-        with cache_scope():
-            pairs = X.minhash_lsh_pairs(docs).persist()
-            n_pairs = pairs.count()
+        pairs = X.minhash_lsh_pairs(docs).persist()
+        n_pairs = pairs.count()
         stages["pairs"] = round(time.time() - t1, 2)
         t1 = time.time()
         clus = S_clust.connected_components(

@@ -37,8 +37,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .scope import scoped_persist
-
 
 def _pairs_in(arr: str) -> str:
     """SQL for the array of every (a, b) struct pair of the sorted array
@@ -74,17 +72,13 @@ def capped_bucket_pairs(rows: DataFrame, key: list[str], member: str,
     cheaper than a members-keyed shuffle. The default (None) keeps the
     full per-bucket output.
     """
-    # persist(): the small and hot branches both read the aggregate.
-    # persist, NOT localCheckpoint — checkpoint lineage truncation GCs the
-    # stage's SQLMetrics while straggler task completions still reference
-    # them, spraying benign-but-noisy 'Failed to update accumulator'
-    # ERRORs. scoped: a caller that materializes inside a cache_scope()
-    # (pipeline stage writes, streaming micro-batches) releases this cache
-    # on exit
-    grp = scoped_persist(
-        rows.groupBy(*key)
-        .agg(F.sort_array(F.collect_list(member)).alias("members"))
-        .where(F.size("members") > 1))
+    # the small and hot branches both read the aggregate; Spark's exchange
+    # reuse shares its shuffle (the second read is a ReusedExchange), so
+    # the input is scanned and shuffled once and no cache outlives the
+    # query
+    grp = (rows.groupBy(*key)
+           .agg(F.sort_array(F.collect_list(member)).alias("members"))
+           .where(F.size("members") > 1))
 
     out_key = key if dedup_key is None else list(dedup_key)
 

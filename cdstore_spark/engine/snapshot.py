@@ -98,22 +98,14 @@ class StageCheckpoint:
         semantics are unchanged: a chunk's manifest entry is written only
         after its parquet write completes.
         """
-        from .scope import cache_scope
-
         self._prune_orphan_chunks()
         todo = [i for i in range(self.n_chunks) if self._entry(i) is None]
 
         def _one(i: int) -> None:
             t0 = time.time()
             out = os.path.join(self.dir, f"chunk={i}")
-            # per-chunk cache scope: scoped_persist()s made while building
-            # and writing this chunk (e.g. the candidate join's bucket
-            # aggregate) are released as soon as the chunk's parquet
-            # write materializes
-            with cache_scope():
-                df = (compute_chunk(i)
-                      .withColumn("_part", F.spark_partition_id()))
-                df.write.mode("overwrite").parquet(out)
+            (compute_chunk(i).withColumn("_part", F.spark_partition_id())
+             .write.mode("overwrite").parquet(out))
             written = spark.read.parquet(out)
             hcols = hash_cols_for_lineage or [
                 c for c in written.columns if c != "_part"]

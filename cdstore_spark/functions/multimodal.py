@@ -19,14 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-META_SCHEMA = T.StructType([
-    T.StructField("clip_id", T.StringType()),
-    T.StructField("n_bytes", T.LongType()),
-    T.StructField("content_md5", T.StringType()),
-    T.StructField("header_u32", T.LongType()),
-])
-
-
 def binary_meta(df: DataFrame, id_col: str = "clip_id",
                 bin_col: str = "bytes") -> DataFrame:
     """Cheap typed metadata over an opaque binary column — pure built-ins

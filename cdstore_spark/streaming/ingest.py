@@ -268,15 +268,9 @@ def incremental_dedup_ingest(spark: SparkSession, input_dir: str,
     feats_stream = S_feat.featurize(stream, cfg)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # cache_scope releases scoped_persist()s made by the batch engine
-        # (capped_bucket_pairs' bucket aggregate) once this batch's writes
-        # land — a long-running stream must not accumulate one cached
-        # aggregation per micro-batch
-        from ..engine.scope import cache_scope
-        with cache_scope():
-            _process_batch_inner(batch_df, epoch_id)
-
-    def _process_batch_inner(batch_df: DataFrame, epoch_id: int) -> None:
+        # the batch and its band rows are the only caches an epoch makes,
+        # and the finally below releases both: a long-running stream
+        # accumulates no cached blocks per micro-batch
         batch_df = batch_df.persist()
         new_bands = None
         try:

@@ -106,8 +106,7 @@ class TestVerifyShuffleFallback:
         builds — must produce the IDENTICAL confirmed set. Forced by
         disabling the session's auto-broadcast thresholds, so neither the
         static planner nor AQE can broadcast the feature projection. The
-        plan persists nothing: called outside any cache_scope it must
-        leave no cached RDD behind."""
+        plan persists nothing: it must leave no cached RDD behind."""
         from cdstore_spark.engine import candidates as S_cand
         from cdstore_spark.engine import verify as S_verify
 
@@ -249,62 +248,72 @@ class TestVerifyKernel:
         assert m == {"d": "d"} and m.used == 10
 
 
+def _cached_rdds(spark) -> dict[int, str]:
+    """id -> description of every persisted RDD except localCheckpoints
+    (the CC fixpoint's lineage cuts, jaccard_pairs' gram arrays), which
+    the ContextCleaner releases on GC rather than by an explicit
+    unpersist."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().toList()
+    out = {}
+    for i in range(it.size()):
+        t = it.apply(i)
+        desc = t._2().toString()
+        if "localCheckpoint" not in desc:
+            out[int(t._1())] = desc[:120]
+    return out
+
+
 class TestCacheHygiene:
     def test_no_cache_blocks_survive_scoped_pipeline(self, spark,
                                                      smoke_golden):
-        """Scoped persist lifetimes: after a full inline pipeline run whose
-        stages materialize inside cache_scope()s (the bench/driver
-        pattern), no cached RDD blocks may remain registered — a
-        long-lived driver session running many queries must not
-        accumulate MEMORY_AND_DISK blocks."""
+        """After a full inline pipeline run that releases the stage
+        outputs it persisted itself, no cached RDD blocks may remain
+        registered — a long-lived driver session running many queries
+        must not accumulate MEMORY_AND_DISK blocks."""
         from cdstore_spark.engine import candidates as S_cand
-        from cdstore_spark.engine import verify as S_verify
-        from cdstore_spark.engine.scope import cache_scope
 
         spark.catalog.clearCache()
         feats = S_feat.featurize_from_parquet(
             spark, golden.clips_path("smoke"), CFG).persist()
         n = feats.count()
-        with cache_scope():
-            cand, _ = S_cand.candidate_pairs(feats, CFG)
-            cand = cand.persist()
-            cand.count()
-        with cache_scope():
-            conf = S_verify.verify_candidates(cand, feats, CFG,
-                                              n_feats=n).persist()
-            conf.count()
+        cand, _ = S_cand.candidate_pairs(feats, CFG)
+        cand = cand.persist()
+        cand.count()
+        conf = S_verify.verify_candidates(cand, feats, CFG,
+                                          n_feats=n).persist()
+        conf.count()
         clips = spark.read.parquet(golden.clips_path("smoke"))
         S_clust.connected_components(
             conf.select("a", "b"), clips.select("clip_id")).count()
         # release the stage outputs the caller owns
         for df in (conf, cand, feats):
             df.unpersist(blocking=True)
-        # localCheckpoint RDDs (the CC fixpoint's lineage cuts) are
-        # ContextCleaner-managed — they unpersist on GC, not explicitly —
-        # so the leak assertion covers everything EXCEPT them
-        sc = spark.sparkContext._jsc.sc()
-        it = sc.getPersistentRDDs().toList()
-        left = []
-        for i in range(it.size()):
-            t = it.apply(i)
-            if "localCheckpoint" not in t._2().toString():
-                left.append((t._1(), t._2().toString()[:120]))
+        left = sorted(_cached_rdds(spark).items())
         assert left == [], f"leaked cached RDDs: {left}"
 
-    def test_scoped_persist_warns_outside_scope(self, spark):
-        """A persist that no cache_scope() will release leaks in a long-
-        lived session, so scoped_persist warns outside a scope and is
-        silent inside one."""
-        import warnings
+    def test_operators_persist_nothing(self, spark, smoke_golden):
+        """Operators return plans and hold no cache: each candidate
+        operator, built and collected with no caller-side scope, leaves
+        no persisted RDD behind."""
+        from cdstore_spark.engine import candidates as S_cand
+        from cdstore_spark.functions import textops as X
+        from cdstore_spark.golden_funcs import SF_DIR
 
-        from cdstore_spark.engine.scope import cache_scope, scoped_persist
-        df = spark.range(3)
-        with pytest.warns(RuntimeWarning, match="cache_scope"):
-            scoped_persist(df).unpersist()
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")
-            with cache_scope():
-                scoped_persist(df)
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        feats = S_feat.featurize_from_parquet(
+            spark, golden.clips_path("smoke"), CFG)
+        before = _cached_rdds(spark)
+        for name, build in (
+                ("jaccard_pairs", lambda: X.jaccard_pairs(docs)),
+                ("minhash_lsh_pairs", lambda: X.minhash_lsh_pairs(docs)),
+                ("simhash_hamming_pairs",
+                 lambda: X.simhash_hamming_pairs(docs)),
+                ("candidate_pairs",
+                 lambda: S_cand.candidate_pairs(feats, CFG)[0])):
+            build().collect()
+            new = {k: v for k, v in _cached_rdds(spark).items()
+                   if k not in before}
+            assert new == {}, (name, new)
 
 
 class TestConnectedComponents:

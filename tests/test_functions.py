@@ -263,13 +263,14 @@ class TestBucketPairs:
 
     def test_hot_buckets_build_no_job_and_plan_no_join(self, spark):
         """Three hot buckets, two sharing one 40-member set: building the
-        plan starts no Spark job, the static plan (AQE off) has no join,
-        and the rows are the mirror's pairs with no duplicate — under
+        plan starts no Spark job, the static plan (AQE off) has no join
+        and no cache, the hot branch reads the bucket aggregate's shuffle
+        through a ReusedExchange (so the aggregate needs no persist), and
+        the rows are the mirror's pairs with no duplicate — under
         dedup_key=[] the shared set is enumerated once."""
         import re
 
         from cdstore_spark.engine.bucket_pairs import capped_bucket_pairs
-        from cdstore_spark.engine.scope import cache_scope
         shared = [f"s{i:02d}" for i in range(40)]
         other = [f"t{i:02d}" for i in range(30)]
         df = spark.createDataFrame(
@@ -280,23 +281,25 @@ class TestBucketPairs:
         aqe = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            with cache_scope():
-                sc.setJobGroup(group, group)
-                try:
-                    out = capped_bucket_pairs(df, ["k"], "member", cap=16,
-                                              soft=8, dedup_key=[])
-                    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-                    plan = out._jdf.queryExecution().executedPlan().toString()
-                finally:
-                    sc.setLocalProperty("spark.jobGroup.id", None)
-                    sc.setLocalProperty("spark.job.description", None)
-                rows = [tuple(r) for r in out.select("a", "b").collect()]
+            sc.setJobGroup(group, group)
+            try:
+                out = capped_bucket_pairs(df, ["k"], "member", cap=16,
+                                          soft=8, dedup_key=[])
+                jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+                plan = out._jdf.queryExecution().executedPlan().toString()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            rows = [tuple(r) for r in out.select("a", "b").collect()]
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
         assert jobs == []
         assert not re.search(r"\b(SortMergeJoin|BroadcastHashJoin|"
                              r"ShuffledHashJoin|BroadcastNestedLoopJoin|"
                              r"CartesianProduct)\b", plan), plan
+        assert "InMemoryRelation" not in plan, plan
+        assert re.search(r"ReusedExchange \[[^\]]*\], "
+                         r"Exchange hashpartitioning\(k#", plan), plan
         assert len(rows) == len(set(rows))
         assert set(rows) == (_mirror_capped_pairs(shared, 16)
                              | _mirror_capped_pairs(other, 16))
@@ -404,6 +407,11 @@ class TestTextops:
             tk = t.split()
             tri = {tuple(tk[k:k + 3]) for k in range(len(tk) - 2)}
             assert len(sets.get(d, ())) == len(tri)   # no grams if < 3 toks
+        # the gram profile explodes the same arrays; the short docs must
+        # not break it
+        st = X.gram_df_stats(df).first()
+        assert st["n_grams"] == len(set().union(*sets.values()))
+        assert st["n_gram_postings"] == sum(map(len, sets.values()))
 
         def ref(t):
             out = set()

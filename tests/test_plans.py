@@ -74,7 +74,6 @@ class TestPlans:
         (AQE off) is the one Spark compiles before any runtime rewrite."""
         import re
 
-        from cdstore_spark.engine.scope import cache_scope
         from cdstore_spark.functions import textops as X
         from cdstore_spark.golden_funcs import SF_DIR
         joins = re.compile(r"\b(SortMergeJoin|BroadcastHashJoin|"
@@ -85,9 +84,7 @@ class TestPlans:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
             for fn in (X.jaccard_pairs, X.minhash_lsh_pairs):
-                with cache_scope():
-                    plan = (fn(docs)._jdf.queryExecution().executedPlan()
-                            .toString())
+                plan = fn(docs)._jdf.queryExecution().executedPlan().toString()
                 assert "md5" not in plan, fn.__name__
                 assert len(joins.findall(plan)) <= 5, (fn.__name__, plan)
         finally:

@@ -37,11 +37,9 @@ def _batch_pairs(spark, src: pd.DataFrame, cfg) -> set:
     """Batch candidate_pairs over all of src at once."""
     from cdstore_spark.engine import candidates as S_cand
     from cdstore_spark.engine import featurize as S_feat
-    from cdstore_spark.engine.scope import cache_scope
     feats = S_feat.featurize(spark.createDataFrame(src), cfg)
-    with cache_scope():
-        exp, _ = S_cand.candidate_pairs(feats, cfg)
-        return set(map(tuple, exp.select("a", "b").toPandas().values))
+    exp, _ = S_cand.candidate_pairs(feats, cfg)
+    return set(map(tuple, exp.select("a", "b").toPandas().values))
 
 
 def _assert_stream_equals_batch(spark, clips: pd.DataFrame, tmp_path,

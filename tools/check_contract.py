@@ -44,7 +44,7 @@ def main() -> None:
     import __spark_entry__ as E
     from cdstore_spark.engine.session import get_spark
 
-    spark = get_spark("contract-check", parallelism=16)
+    spark = get_spark("contract-check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
