@@ -1,9 +1,8 @@
 """Deterministic synthetic `audio_clips` generator (FIXTURES.md §1–2).
 
 No external data anywhere (north rule): every byte is synthesized from
-NumPy's seeded Philox/PCG streams. Generation is two-phase so it can run
-either locally (oracle / fast tests) or distributed (Spark mapInPandas over
-spec partitions for the bench tier):
+NumPy's seeded Philox/PCG streams. Generation is two-phase: a metadata
+spec, then the rows it describes, realized batch by batch:
 
     build_spec(n, n_pairs)  → tiny metadata DataFrame (one row per clip:
                               wave seed, transforms, transcript, codec, ...)

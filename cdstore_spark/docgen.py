@@ -8,8 +8,8 @@ group of `hot` members (boilerplate/template text), which lands in ONE
 enumerate hot²/2 pairs per band (12.5M at hot=5000 — the O(m²) explosion
 the round-2 verdict flagged); the shared capped enumerator
 (engine/bucket_pairs.py) must keep candidates at O(hot·bucket_cap) while
-union-find still returns one cluster. bench.py measures the end-to-end
-wall and asserts both.
+union-find still returns one cluster. The benchmark's `docs_skew`
+workload (perfbench/) times the end-to-end job and asserts both.
 
 Everything is seeded and cached under data/ (gitignored, regenerated
 deterministically — same pattern as the audio golden tiers).

@@ -25,7 +25,7 @@ at component minima; cluster_id = min(clip_id) in component falls out.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: adaptive local-finish gate: once a round's output edge set is at most

@@ -195,7 +195,8 @@ def verify_candidates(cand: DataFrame, feats: DataFrame,
                       n_cand: int | None = None) -> DataFrame:
     """Candidate pairs + features → confirmed pairs (audio_ok OR text_ok).
 
-    `n_feats` and `n_cand` are accepted for call compatibility and unused.
+    `n_feats` and `n_cand` are unused; they stay only because the
+    benchmark's workloads (perfbench/workloads.py) pass them.
     """
     fsub = feats.select("clip_id", *_SIDE_COLS)
 

@@ -20,7 +20,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -31,31 +31,36 @@ JACCARD_THRESHOLD = 0.8
 
 
 def _tokens(df: DataFrame) -> DataFrame:
-    return df.select("doc_id",
-                     F.split(F.lower(F.col("text")), r"\s+").alias("toks"))
+    """(doc_id, toks) for the docs with at least NGRAM whitespace tokens."""
+    return (df.select("doc_id",
+                      F.split(F.lower(F.col("text")), r"\s+").alias("toks"))
+            .where(F.size("toks") >= NGRAM))
 
 
-def _gram_hashed(df: DataFrame, n: int = NGRAM) -> DataFrame:
-    """(doc_id, ghs): ONE row per doc with >= n tokens, `ghs` the sorted,
-    distinct array of its hashed word n-grams — the single gram
-    representation every text path shares. Grams are hashed per row
-    (transform over token positions, no explode), so no downstream
-    exchange moves raw n-gram strings and no gram-keyed row exists until a
-    caller that needs one (document frequencies, the prefix join) explodes
-    `ghs` itself. Sorted and distinct, so the array is a canonical form of
-    the gram set: equal sets give equal arrays, and its size is |A|."""
-    t = _tokens(df).where(F.size("toks") >= n)
-    # `get` (NULL past the end), not ANSI element_at: once the optimizer
-    # pushes a consumer's filter on `ghs` (explode's inferred size > 0)
-    # into the size filter above, subexpression elimination computes the
-    # grams before the size check, and element_at would throw on a short
-    # doc that the size check then drops anyway
+def _gram_hashes() -> Column:
+    """The sorted, distinct array of the hashed word n-grams of `toks`,
+    the single gram representation every text path shares. Grams are
+    hashed per row (transform over token positions), so no exchange moves
+    raw n-gram strings; the array is a canonical form of the gram set, and
+    its size is |A|. A caller that needs one row per gram of raw docs
+    explodes this expression, not a lazily projected column holding it:
+    from an explode of a column the optimizer infers `size(col) > 0` and
+    pushes it below the projection, hashing every gram a second time."""
+    # `get` (NULL past the end), not ANSI element_at: should a filter on
+    # the array be pushed into _tokens' size filter, subexpression
+    # elimination computes the grams before the size check, and
+    # element_at would throw on a short doc that the check then drops
     gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.get("toks", i + k) for k in range(n)])
-    ghs = F.sort_array(F.array_distinct(
-        F.transform(F.sequence(F.lit(0), F.size("toks") - n),
+        " ", *[F.get("toks", i + k) for k in range(NGRAM)])
+    return F.sort_array(F.array_distinct(
+        F.transform(F.sequence(F.lit(0), F.size("toks") - NGRAM),
                     lambda i: F.xxhash64(gram(i)))))
-    return t.select("doc_id", ghs.alias("ghs"))
+
+
+def _gram_hashed(df: DataFrame) -> DataFrame:
+    """(doc_id, ghs): ONE row per doc with >= NGRAM tokens, `ghs` its
+    _gram_hashes array."""
+    return _tokens(df).select("doc_id", _gram_hashes().alias("ghs"))
 
 
 def dedup_exact_canonical(df: DataFrame) -> DataFrame:
@@ -189,7 +194,7 @@ def gram_df_stats(df: DataFrame, hot_df: int = 32) -> DataFrame:
     audio_skew_stats: how many distinct grams, how hot the hottest key is,
     and how many grams exceed the hot threshold (i.e. would dominate a
     naive gram self-join's shuffle; the prefix filter keeps them out)."""
-    dfreq = (_gram_hashed(df).select(F.explode("ghs").alias("gh"))
+    dfreq = (_tokens(df).select(F.explode(_gram_hashes()).alias("gh"))
              .groupBy("gh").agg(F.count(F.lit(1)).alias("gdf")))
     zero = F.lit(0).cast("long")
     return dfreq.agg(

@@ -36,16 +36,6 @@ TIERS: dict[str, tuple[int, int]] = {
     "smoke": (1_000, 50),
     "correctness": (10_000, 500),
     "bench": (100_000, 5_000),
-    # scaling-ladder tier: 4x bench, used ONLY for the N→4N e2e scaling
-    # evidence (no single-node oracle run at this size — correctness is
-    # gated at smoke/correctness tiers; the ladder instead asserts the
-    # confirmed-pair count and value hash are IDENTICAL across
-    # parallelism levels). Big enough that fixed driver latency (~40 s:
-    # CC fixpoint barriers, AQE stage scheduling, broadcast builds —
-    # measured stage-by-stage in BENCH.md) amortizes below 10% of the
-    # 8-core wall, which is the regime a real multi-executor job at
-    # 10^12 rows lives in.
-    "scale": (400_000, 20_000),
 }
 SF_TO_TIER = {"sf0.001": "smoke", "sf0.01": "correctness", "sf0.1": "bench"}
 
@@ -106,46 +96,6 @@ def ensure_clips(tier: str) -> str:
     _write(clips, clips_path(tier), _CLIPS_SCHEMA)
     _write(datagen.planted_pairs(spec), os.path.join(d, "planted_pairs.parquet"))
     publish(_clips_marker(tier), ident)
-    return clips_path(tier)
-
-
-def ensure_clips_spark(tier: str, spark) -> str:
-    """Distributed variant of ensure_clips for big tiers (bench: 100k clips,
-    ~5.6 GB): spec built on the driver (pure metadata), synthesis fanned out
-    via mapInPandas, written as many-file parquet so the payload-local
-    reader gets plenty of row-group work units."""
-    ident = clips_ident(tier)
-    if reusable(_clips_marker(tier), ident):
-        return clips_path(tier)
-    d = tier_dir(tier)
-    os.makedirs(d, exist_ok=True)
-    n, p = TIERS[tier]
-    spec = datagen.build_spec(n, p)
-    planted = datagen.planted_pairs(spec)
-
-    from pyspark.sql import types as T
-    out_schema = T.StructType([
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("sr_hz", T.IntegerType()),
-        T.StructField("dur_ms", T.IntegerType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("transcript", T.StringType()),
-    ])
-
-    def synth(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield datagen.synth_batch(pdf)
-
-    spec_df = spark.createDataFrame(spec).repartition(max(32, n // 512))
-    # one file per partition, each with small row groups
-    (spec_df.mapInPandas(synth, out_schema)
-     .write.mode("overwrite")
-     .option("parquet.block.size", 16 * 1024 * 1024)
-     .parquet(clips_path(tier)))
-    _write(planted, os.path.join(d, "planted_pairs.parquet"))
-    publish(_clips_marker(tier), dict(ident, writer="spark"))
     return clips_path(tier)
 
 

@@ -240,8 +240,7 @@ def _sweep_covered(band_dir: str, watermark: int, keep_base: str) -> None:
 def incremental_dedup_ingest(spark: SparkSession, input_dir: str,
                              state_dir: str,
                              cfg: PipelineConfig = DEFAULT,
-                             available_now: bool = True,
-                             compact_every: int | None = None):
+                             available_now: bool = True):
     """Start the incremental ingest stream; returns the StreamingQuery.
 
     state_dir/features: accumulated feature rows (parquet, epoch-tagged)
@@ -251,9 +250,6 @@ def incremental_dedup_ingest(spark: SparkSession, input_dir: str,
     state_dir/pairs:    accumulated candidate pairs
     state_dir/_checkpoint: Structured Streaming WAL/commit log
     """
-    if compact_every is None:
-        compact_every = BAND_COMPACT_EVERY   # resolved at call time so
-        # tests/benches can retune the module default via monkeypatch
     feat_dir = os.path.join(state_dir, "features")
     band_dir = os.path.join(state_dir, "bands")
     pair_dir = os.path.join(state_dir, "pairs")
@@ -359,7 +355,9 @@ def incremental_dedup_ingest(spark: SparkSession, input_dir: str,
             loose = [e for e in _epoch_partitions(band_dir)
                      if e < int(epoch_id)
                      and (old is None or e > old[0])]
-            if len(loose) >= compact_every:
+            # the module default is read at call time, so a test can
+            # retune it with monkeypatch
+            if len(loose) >= BAND_COMPACT_EVERY:
                 compact_band_index(spark_l, band_dir, int(epoch_id) - 1)
         finally:
             if new_bands is not None:

@@ -89,3 +89,15 @@ class TestPlans:
                 assert len(joins.findall(plan)) <= 5, (fn.__name__, plan)
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+    def test_gram_df_stats_hashes_grams_once(self, spark):
+        """gram_df_stats explodes the gram-hash expression itself: an
+        explode of a projected gram array makes the optimizer push an
+        inferred size filter below the projection that hashes every gram
+        again."""
+        from cdstore_spark.functions import textops as X
+        from cdstore_spark.golden_funcs import SF_DIR
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        plan = X.gram_df_stats(docs)._jdf.queryExecution() \
+            .optimizedPlan().toString()
+        assert plan.count("xxhash64(") == 1, plan
